@@ -2353,7 +2353,7 @@ def q_dedup_minhash_fallback(spark: SparkSession, sf_dir: str) -> DataFrame:
     fallback plan (broadcast_arrays=False) — the physical strategy a
     multi-executor cluster takes when the packed shingle corpus exceeds
     executor heaps (pipeline/dedup.py jaccard_verify). Shares the oracle
-    with dedup_minhash, so the driver proves broadcast-on ≡ shuffled
+    with dedup_minhash, so the driver proves hybrid ≡ shuffled
     every round at every SF it runs, not just in a one-off differential."""
     return dedup.minhash_near_duplicates(
         _docs(spark, sf_dir), k=5, n_hashes=16, r=4, threshold=0.4,

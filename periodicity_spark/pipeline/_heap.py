@@ -1,4 +1,18 @@
-"""Broadcast-budget estimation shared by the LSH verify joins.
+"""The verify-join plan shared by both LSH pipelines, and the broadcast
+budget it is sized from.
+
+``jaccard_verify`` (MinHash) and ``cosine_near_duplicates_lsh`` both end
+in candidates (d1, d2) ⋈ payload on d1 ⋈ payload on d2. ``verify_chunks``
+picks the plan and ``verify_join`` builds it; there are two plans:
+
+- HYBRID (auto): the d1 join is shuffled and the d2 side is broadcast in
+  ceil(payload / ``max_single_broadcast``) hash chunks, so the
+  payload-carrying intermediate never re-shuffles and no broadcast
+  relation exceeds its caps. Each pair lands in exactly one chunk, so the
+  union of chunks is the full pair multiset.
+- Plain shuffled: when the budget is unknown, when more than
+  ``MAX_VERIFY_CHUNKS`` chunks would be needed, or when the caller forces
+  it with False.
 
 A broadcast hash relation is built in EVERY EXECUTOR'S heap (the driver
 only hosts the serialized torrent blocks), so the budget must key on the
@@ -36,7 +50,13 @@ single-box soaks.
 
 from __future__ import annotations
 
+import math
 import re
+from collections.abc import Callable
+from functools import reduce
+
+from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 # raw column bytes → resident hash-relation bytes: UnsafeRow per-field
 # headers and alignment + the map's key/page arrays + one transient
@@ -60,6 +80,10 @@ RESULT_SIZE_OVERHEAD = 1.1
 # in an 80 GiB heap and aborted). Gate with a margin so a relation that
 # would land near the edge is refused before the work is done.
 MAX_BROADCAST_TABLE_BYTES = 8 * 2**30
+
+# each hybrid chunk is one more pass over the candidates and the d1 join;
+# past this many chunks the verify plan falls back to plain shuffled joins
+MAX_VERIFY_CHUNKS = 32
 
 _UNITS = {
     "": 1,
@@ -108,38 +132,23 @@ def broadcast_budget(spark) -> int:
     return min(drv, exe)
 
 
-def fits_broadcast(spark, payload_bytes: float, copies: int = 1) -> bool:
-    """True when ``copies`` broadcast relations of ``payload_bytes`` raw
-    column bytes each fit comfortably (overhead multiplier + safety
-    fraction) in the binding heap. False on an unknown budget.
-
-    Also gated on ``spark.driver.maxResultSize``: a broadcast relation is
-    BUILT by collecting the child's task results to the driver, and that
-    collect is capped by maxResultSize — a relation that clears the heap
-    budget but exceeds the collect cap fails the JOB, not gracefully
-    (observed: the sf5 packed-array relation, 4.3 GB raw, aborted under
-    the 1 GB default cap that the sf1 relation squeaked under at
-    858 MB). Each copy's raw payload must fit the cap with the same
-    SERIALIZED-row margin (``RESULT_SIZE_OVERHEAD`` — compact rows, not
-    the in-heap hash relation: the sf1 relation at 858 MB raw
-    demonstrably collects under the 1 GB default cap, and this gate must
-    not flip that working regime onto the fallback); 0/unset means
-    unlimited, an
-    unparseable value means unknown → do not broadcast. Raise
-    ``SPARK_MAX_RESULT_SIZE`` alongside driver memory for single-box
-    scale runs."""
-    budget = broadcast_budget(spark)
-    if not payload_bytes * copies * HASH_RELATION_OVERHEAD < budget * SAFETY_FRACTION:
-        return False
-    return max_single_broadcast(spark) >= payload_bytes
-
-
 def max_single_broadcast(spark) -> float:
     """Largest RAW payload (bytes) one broadcast relation may carry under
-    every binding limit: the heap budget for a single copy, Spark's hard
-    8 GiB table cap (with margin), and the driver collect cap. 0 when the
-    budget is unknown. This is the chunk-sizing primitive for the hybrid
-    verify plan (shuffled build side + hash-chunked broadcast side)."""
+    every binding limit: the heap budget for a single copy (overhead
+    multiplier + safety fraction), Spark's hard 8 GiB table cap (with
+    margin), and the driver collect cap. 0 when the budget is unknown.
+    This is the chunk-sizing primitive of the hybrid verify plan.
+
+    The collect cap binds because a broadcast relation is BUILT by
+    collecting the child's task results to the driver, and that collect
+    is capped by ``spark.driver.maxResultSize`` — a relation that clears
+    the heap budget but exceeds the cap fails the JOB, not gracefully
+    (observed: the sf5 packed-array relation, 4.3 GB raw, aborted under
+    the 1 GB default cap). The payload must fit the cap with the
+    SERIALIZED-row margin (``RESULT_SIZE_OVERHEAD``); 0/unset means
+    unlimited, an unparseable value means unknown. Raise
+    ``SPARK_MAX_RESULT_SIZE`` alongside driver memory for single-box
+    scale runs."""
     budget = broadcast_budget(spark)
     if budget <= 0:
         return 0.0
@@ -157,3 +166,49 @@ def max_single_broadcast(spark) -> float:
             return 0.0
         allow = min(allow, mrs / RESULT_SIZE_OVERHEAD)
     return allow
+
+
+def verify_chunks(spark, mode: bool | None, payload_bytes: Callable[[], float]) -> int:
+    """The verify-join plan: the number of hash chunks the d2 side is
+    broadcast in (≥ 1, the hybrid plan), or 0 for plain shuffled joins.
+
+    ``mode`` None (auto) sizes ceil(payload / ``max_single_broadcast``)
+    chunks from ``payload_bytes()``, the RAW bytes of one copy of the
+    payload relation. It may over-estimate: that can only add a chunk.
+    The census it runs is skipped when the budget is unknown, which
+    routes to shuffled, as do more than ``MAX_VERIFY_CHUNKS`` chunks.
+    False forces shuffled; any other value raises ValueError."""
+    if mode is False:
+        return 0
+    if mode is not None:
+        raise ValueError(f"verify-join mode must be None (auto) or False, got {mode!r}")
+    allow = max_single_broadcast(spark)
+    if allow <= 0:
+        return 0
+    n = max(1, math.ceil(payload_bytes() / allow))
+    return n if n <= MAX_VERIFY_CHUNKS else 0
+
+
+def verify_join(
+    candidates: DataFrame, d1_side: DataFrame, d2_side: DataFrame, n_chunks: int
+) -> DataFrame:
+    """candidates (d1, d2) ⋈ d1_side on d1 ⋈ d2_side on d2, in the plan
+    ``verify_chunks`` picked. 0: both joins shuffled (AQE may still
+    convert them at runtime). n ≥ 1: the d1 join is shuffled — it moves
+    bare candidate rows and the d1 side once, not a payload per
+    candidate — and the d2 side is broadcast in n chunks by
+    pmod(hash(d2), n), so the fat intermediate flows map-side through
+    the chunk's hash join and never touches a shuffle. Each pair lands in
+    exactly one chunk; the union is the shuffled plan's pair multiset."""
+    if n_chunks == 0:
+        return candidates.join(d1_side, "d1").join(d2_side, "d2")
+    # hash the candidates' key type on both sides, so a wider id type on
+    # the payload side still lands in the same chunk
+    chunk = F.pmod(F.hash(F.col("d2").cast(candidates.schema["d2"].dataType)), F.lit(n_chunks))
+    parts = []
+    for c in range(n_chunks):
+        cand_c, d2_c = candidates, d2_side
+        if n_chunks > 1:
+            cand_c, d2_c = candidates.filter(chunk == c), d2_side.filter(chunk == c)
+        parts.append(cand_c.join(d1_side, "d1").join(F.broadcast(d2_c), "d2"))
+    return reduce(DataFrame.unionByName, parts)

@@ -94,13 +94,11 @@ def _shingle_census_bound(docs: DataFrame, text_col: str, k: int) -> int:
     after the packed path's array_distinct), so Σ greatest(length−k+1, 0)
     over all docs bounds Σ|distinct shingles| from above. One cheap scan
     of the text column — no md5, no array building, no persist write —
-    versus the former exact census, which ran the ENTIRE shingle
-    transform as a standalone job just to size a broadcast whose gate
-    already carries order-of-magnitude margins. The bound errs only
-    conservative: an overestimated payload can demote a borderline
-    broadcast decision toward the always-correct shuffled/hybrid plans
-    (which are result-identical by the pinned differentials), never
-    approve an oversized one."""
+    versus an exact census, which would run the ENTIRE shingle transform
+    as a standalone job just to size the verify join's broadcast chunks.
+    The bound errs only conservative: an overestimated payload can add a
+    chunk to the hybrid verify plan (result-identical by the pinned
+    differentials), never approve an oversized broadcast."""
     row = docs.agg(
         F.sum(
             F.greatest(F.length(F.col(text_col)) - F.lit(k - 1), F.lit(0))
@@ -206,9 +204,9 @@ def char_shingles(
     the same integers, so oracle checks stay exact.
 
     This is the EXPLODED representation (one row per (doc, shingle)) —
-    what the ``strategy="rows"`` verify join and the per-shingle oracle
-    SQL consume. The LSH pipeline itself uses ``char_shingles_packed``,
-    which never explodes and therefore never re-groups."""
+    what ``jaccard_verify`` and the per-shingle oracle SQL consume. The
+    LSH pipeline itself uses ``char_shingles_packed``, which never
+    explodes and therefore never re-groups."""
     grams = _shingle_hex_arrays(docs, k, text_col, id_col)
     return grams.select("doc_id", F.explode("_hs").alias("_h")).select(
         "doc_id",
@@ -438,195 +436,64 @@ def lsh_candidate_pairs(signatures: DataFrame, max_bucket: int = 1000) -> DataFr
 
 def jaccard_verify(
     candidates: DataFrame,
-    shingles: DataFrame | None,
+    shingles: DataFrame,
     threshold: float = 0.0,
-    strategy: str = "array",
-    broadcast_arrays: bool | int | None = None,
+    broadcast_arrays: bool | None = None,
     shingle_count: int | None = None,
-    arrays: DataFrame | None = None,
 ) -> DataFrame:
     """True n-gram Jaccard for candidate pairs only: → (d1, d2, jaccard).
 
-    strategy="array" (default): one groupBy packs each doc's distinct
-    shingles into an array, candidates join the two array payloads by
-    d1/d2 and the intersection is an in-row array_intersect. The shuffle
-    carries each shingle ONCE (inside its doc's array) instead of the
-    row-path's candidate×shingle exploded join — measured 1.8× faster at
-    sf0.1, bit-identical output. The array row is the whole doc's shingle
-    set, so this assumes docs are length-capped (any LLM-corpus pipeline
-    does this upstream); for corpora with unbounded documents use
-    strategy="rows", which never materializes a per-doc row wider than one
-    shingle.
+    One groupBy packs each doc's distinct shingles into an array,
+    candidates join the two array payloads by d1/d2 and the intersection
+    is an in-row array_intersect. The shuffle carries each shingle ONCE
+    (inside its doc's array) instead of a candidate×shingle exploded join
+    — measured 1.8× faster at sf0.1, bit-identical output. The array row
+    is the whole doc's shingle set, so this assumes docs are length-capped
+    (any LLM-corpus pipeline does this upstream).
 
-    ``broadcast_arrays``: the two array joins are the pipeline's biggest
-    shuffle BY FAR when candidates are dense — the (candidates ⋈ d1-array)
-    intermediate carries a full shingle array per candidate and must be
-    re-shuffled on d2 for the second join (sf1 measured: 69M candidates ×
-    ~1.7KB ≈ 120 GB, which ENOSPC'd a 79 GB-free local disk under lz4).
-    With the packed array relation hinted broadcast on BOTH joins, the
-    candidate stream instead flows through two map-side hash joins and the
-    fat intermediate never touches a shuffle. True only while the packed
-    corpus fits EVERY executor heap — auto (None) sizes the measured
-    shingle count × 8B payload (× both join sides × hash-relation
-    overhead) against min(driver, executor) memory via
-    ``_heap.fits_broadcast`` and broadcasts only with an order-of-
-    magnitude margin; an unparseable memory setting disables the
-    broadcast rather than assuming a size. When a single copy cannot
-    broadcast (Spark's hard 8 GiB table limit, the driver collect cap,
-    or the heap budget) auto picks the HYBRID plan — an int value n ≥ 1,
-    also accepted directly: the d1 join runs shuffled and the d2 side is
-    broadcast in n hash-chunks, so the array-carrying intermediate never
-    re-shuffles (the plain fallback's ~590 GB disk footprint at sf5) and
-    no broadcast relation exceeds its caps. False forces the plain
-    shuffled joins (the contract-gated cluster-shape plan, which AQE may
-    still convert per runtime stats).
+    The two array joins run the LSH verify-join plan shared with
+    ``cosine_near_duplicates_lsh`` (``_heap.verify_chunks`` /
+    ``_heap.verify_join``). ``broadcast_arrays`` None (auto) takes the
+    HYBRID plan: the d1 join is shuffled and the d2 arrays are broadcast
+    in as many hash chunks as the payload (8 B per shingle) needs under
+    every broadcast cap, so the array-carrying intermediate never
+    re-shuffles (sf1 measured: 69M candidates × ~1.7 KB ≈ 120 GB when it
+    does, which ENOSPC'd a 79 GB-free local disk under lz4). An unknown
+    memory budget, or more chunks than the cap, takes the plain shuffled
+    joins. False forces them (the contract-gated cluster-shape plan, which
+    AQE may still convert per runtime stats). Any other value raises.
 
-    NOTE auto mode is EAGER: deciding the strategy runs one count() job
-    on ``shingles``. ``minhash_near_duplicates`` passes a cheap
-    length-derived UPPER BOUND instead (``_shingle_census_bound``), which
-    is valid here: the sizing gate only needs the payload not to be
-    underestimated, and a conservative number can only demote the
-    decision toward the result-identical shuffled/hybrid plans. A direct
-    caller with an unpersisted shingle frame pays a full scan+shingle
-    pass — pass ``shingle_count`` (exact or an upper bound, same
-    reasoning) or an explicit ``broadcast_arrays`` to skip it.
+    NOTE auto mode is EAGER: sizing the chunks runs one count() job on
+    ``shingles``. Pass ``shingle_count`` — exact or an UPPER BOUND, since
+    an overestimate can only add a chunk — or ``broadcast_arrays=False``
+    to stay lazy. ``minhash_near_duplicates`` passes the scan-only
+    ``_shingle_census_bound``."""
+    from periodicity_spark.pipeline import _heap
 
-    strategy="rows": intersection via shingle equi-join; sizes via one
-    aggregate. NOTE: sizes is one row per document — corpus-sized, never
-    broadcast it. Candidates are already tiny after LSH banding, so plain
-    shuffle joins (or AQE's own broadcast decision when a side proves
-    small) are the scale-safe plan.
-
-    ``arrays``: a pre-packed (doc_id, _a array<long>, _n int) relation —
-    e.g. projected from ``char_shingles_packed`` — used verbatim as the
-    array join side, skipping the collect_list groupBy entirely (the data
-    was never exploded, so there is nothing to re-group). ``shingle_count``
-    (or an explicit ``broadcast_arrays``) is then required for auto mode:
-    with no exploded frame there is nothing cheap to count."""
-    if strategy == "array":
-        if arrays is not None:
-            arrs = arrays
-            if broadcast_arrays is None and shingle_count is None:
-                raise ValueError(
-                    "jaccard_verify(arrays=...) auto mode needs shingle_count"
-                    " (or pass broadcast_arrays explicitly)"
-                )
-        else:
-            arrs = shingles.groupBy("doc_id").agg(
-                F.collect_list("shingle").alias("_a"),
-                F.count(F.lit(1)).alias("_n"),
-            )
-        if broadcast_arrays is None:
-            from periodicity_spark.pipeline._heap import (
-                fits_broadcast,
-                max_single_broadcast,
-            )
-
-            n_sh = shingle_count if shingle_count is not None else shingles.count()
-            payload = n_sh * 8
-            # payload: one 8B hash per shingle inside its doc's packed
-            # array; two relation copies (d1 and d2 join sides)
-            if fits_broadcast(arrs.sparkSession, payload, copies=2):
-                broadcast_arrays = True
-            else:
-                # middle tier: the HYBRID plan (see below) needs only ONE
-                # chunk of the relation resident at a time
-                allow = max_single_broadcast(arrs.sparkSession)
-                if allow > 0:
-                    chunks = max(1, -(-payload // int(allow)))
-                    broadcast_arrays = chunks if chunks <= 32 else False
-                else:
-                    broadcast_arrays = False
-
-        def _pair_jaccard(j: DataFrame) -> DataFrame:
-            # drop zero-overlap candidates BEFORE the division: the rows
-            # strategy's inner equi-join on shingle can never emit such a
-            # pair, so keeping them here would make the two strategies
-            # diverge at threshold=0, breaking the bit-identical contract.
-            # SQL strings parsed JVM-side; operand shapes mirror the former
-            # Column build (plan-identity pinned in tests), guide §5.
-            out = (
-                j.selectExpr("*", "size(array_intersect(_a1, _a2)) AS _nb")
-                .filter(F.col("_nb") > 0)
-                .selectExpr(
-                    "d1",
-                    "d2",
-                    "_nb / cast(_n1 + _n2 - _nb as double) AS jaccard",
-                )
-            )
-            if threshold > 0:
-                out = out.filter(F.col("jaccard") >= threshold)
-            return out
-
-        a1 = arrs.selectExpr("doc_id AS d1", "_a AS _a1", "_n AS _n1")
-        a2 = arrs.selectExpr("doc_id AS d2", "_a AS _a2", "_n AS _n2")
-        if broadcast_arrays is True or broadcast_arrays is False:
-            side = (
-                (lambda df: F.broadcast(df)) if broadcast_arrays else (lambda df: df)
-            )
-            return _pair_jaccard(
-                candidates.join(side(a1), "d1").join(side(a2), "d2")
-            )
-        # HYBRID (broadcast_arrays = int n_chunks ≥ 1): the regime where
-        # the packed corpus cannot single-broadcast (Spark's hard 8 GiB
-        # table limit, or one copy over the heap budget) but the plain
-        # shuffled plan is disk-infeasible — its (candidates ⋈ d1-arrays)
-        # intermediate carries a full array per candidate and re-shuffles
-        # on d2 (~590 GB raw at sf5). Here the d1 join is a SHUFFLED join
-        # (the shuffle moves bare 16-byte candidate rows and the arrays
-        # relation itself — corpus-sized, not candidate-sized), and the
-        # d2 side is broadcast in hash-chunks small enough to fit every
-        # cap; the fat intermediate flows map-side through the chunk's
-        # broadcast join and is reduced to (d1, d2, jaccard) WITHOUT ever
-        # touching a shuffle. Each pair lands in exactly one chunk
-        # (pmod of d2's hash), so the union is the same pair multiset as
-        # the one-shot plans — asserted bit-identical in tests. Cost: the
-        # arrays relation shuffles once per chunk; chunks are O(corpus /
-        # chunk-allowance), the same arithmetic a 1000-executor cluster
-        # would run with its own executor-heap allowance.
-        n_chunks = int(broadcast_arrays)
-        parts = []
-        for c in range(n_chunks):
-            cand_c = candidates.filter(F.pmod(F.hash("d2"), F.lit(n_chunks)) == c)
-            a2_c = arrs.filter(
-                F.pmod(F.hash("doc_id"), F.lit(n_chunks)) == c
-            ).select(
-                F.col("doc_id").alias("d2"),
-                F.col("_a").alias("_a2"),
-                F.col("_n").alias("_n2"),
-            )
-            parts.append(
-                _pair_jaccard(
-                    cand_c.join(a1, "d1").join(F.broadcast(a2_c), "d2")
-                )
-            )
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-    if strategy != "rows":
-        raise ValueError(f"unknown jaccard_verify strategy: {strategy!r}")
-    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    s1 = shingles.select(F.col("doc_id").alias("d1"), "shingle")
-    s2 = shingles.select(F.col("doc_id").alias("_d2"), F.col("shingle").alias("_sh2"))
-    inter = (
-        candidates.join(s1, "d1")
-        .join(s2, (F.col("d2") == F.col("_d2")) & (F.col("shingle") == F.col("_sh2")))
-        .groupBy("d1", "d2")
-        .agg(F.count(F.lit(1)).alias("n_both"))
+    n_chunks = _heap.verify_chunks(
+        candidates.sparkSession,
+        broadcast_arrays,
+        lambda: 8 * (shingle_count if shingle_count is not None else shingles.count()),
     )
-    z1 = sizes.select(F.col("doc_id").alias("d1"), F.col("n_sh").alias("n1"))
-    z2 = sizes.select(F.col("doc_id").alias("d2"), F.col("n_sh").alias("n2"))
+    arrs = shingles.groupBy("doc_id").agg(
+        F.collect_list("shingle").alias("_a"),
+        F.count(F.lit(1)).alias("_n"),
+    )
+    a1 = arrs.selectExpr("doc_id AS d1", "_a AS _a1", "_n AS _n1")
+    a2 = arrs.selectExpr("doc_id AS d2", "_a AS _a2", "_n AS _n2")
+    # drop zero-overlap candidates BEFORE the division: a shingle
+    # equi-join verify can never emit such a pair, so keeping them would
+    # emit jaccard=0.0 rows at threshold=0. SQL strings parsed JVM-side;
+    # operand shapes mirror the former Column build (plan-identity pinned
+    # in tests), guide §5.
     out = (
-        inter.join(z1, "d1")
-        .join(z2, "d2")
-        .select(
+        _heap.verify_join(candidates, a1, a2, n_chunks)
+        .selectExpr("*", "size(array_intersect(_a1, _a2)) AS _nb")
+        .filter(F.col("_nb") > 0)
+        .selectExpr(
             "d1",
             "d2",
-            (
-                F.col("n_both")
-                / (F.col("n1") + F.col("n2") - F.col("n_both")).cast("double")
-            ).alias("jaccard"),
+            "_nb / cast(_n1 + _n2 - _nb as double) AS jaccard",
         )
     )
     if threshold > 0:
@@ -643,20 +510,32 @@ def minhash_near_duplicates(
     text_col: str = "text",
     id_col: str = "doc_id",
     max_bucket: int = 1000,
-    broadcast_arrays: bool | int | None = None,
+    broadcast_arrays: bool | None = None,
 ) -> DataFrame:
     """Full MinHash-LSH pipeline: shingle → sign → bucket-join → verify.
     → (d1, d2, jaccard ≥ threshold).
 
     Over-cap bucket drops are silent in the pair output; audit them with
     ``minhash_cap_audit`` at the same (k, n_hashes, r, max_bucket).
-    ``broadcast_arrays`` forwards to ``jaccard_verify`` — None (default)
-    auto-sizes the verify join (both-sides broadcast when the packed
-    corpus fits every cap, else the hybrid shuffled-d1/chunk-broadcast-d2
-    plan, else plain shuffled); an int n forces the hybrid at n chunks;
-    False forces the plain shuffled fallback plan (the branch a
+    ``broadcast_arrays`` forwards to ``jaccard_verify``: None (default)
+    takes the hybrid shuffled-d1/chunk-broadcast-d2 plan, its chunks
+    sized from the scan-only length bound ``_shingle_census_bound`` (one
+    small job); False forces the plain shuffled plan (the branch a
     multi-executor cluster takes when even one chunk exceeds executor
-    heaps)."""
+    heaps) and skips the bound.
+
+    Eager: the pair set comes back checkpointed, and the corpus-sized
+    shingle cache is released before returning, on failure too."""
+    # chunk sizing reads the length-sum UPPER BOUND — a scan-only
+    # aggregate (no md5, no arrays, no persist write), so the packed cache
+    # materializes INLINE in the main job instead of in a census job of
+    # its own; its ~1.4× slack can only add a chunk. It reads the input as
+    # given: after the spread below it would also pay a text shuffle.
+    n_sh = (
+        _shingle_census_bound(docs, text_col, k)
+        if broadcast_arrays is None
+        else None
+    )
     docs = _spread_single_split(docs, key=id_col)
     # the shingle set feeds signatures AND both sides of the verify join —
     # persist the PACKED per-doc representation (one array row per doc)
@@ -673,69 +552,46 @@ def minhash_near_duplicates(
     packed = char_shingles_packed(
         docs, k=k, text_col=text_col, id_col=id_col
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    # broadcast-sizing census, two-tier (r11): the length-sum UPPER BOUND
-    # is a scan-only aggregate (no md5, no arrays, no persist write), so
-    # when it clears every broadcast gate the true (smaller) payload
-    # clears them too — decide True right here, and the packed cache
-    # materializes INLINE in the main job (pipelined into the first
-    # consumer's stage instead of a separate task wave + cache re-read —
-    # measured 1.6 s at sf0.1). Only when the bound FAILS a gate is it too
-    # blunt to act on: its ~1.4× slack can demote a payload that actually
-    # fits (measured: sf1's 858 MB relation collects under the 1 GB
-    # maxResultSize cap, its 1.23 GB bound does not, and the demoted
-    # hybrid plan cost 375 s vs 239 s broadcast). In that borderline
-    # regime pay the ONE exact-census job on the packed cache — the job
-    # is not wasted, it materializes the cache the main job reuses — and
-    # let the verify gate size broadcast/hybrid/shuffled from the exact
-    # count. An explicit broadcast_arrays skips the census entirely.
-    n_sh = 0
-    if broadcast_arrays is None:
-        from periodicity_spark.pipeline._heap import fits_broadcast
-
-        bound = _shingle_census_bound(docs, text_col, k)
-        if fits_broadcast(docs.sparkSession, bound * 8, copies=2):
-            broadcast_arrays = True
-        else:
-            n_sh = packed.agg(F.sum(F.size("sh"))).first()[0] or 0
-    # signatures: explode FROM THE CACHE into the codegen aggregate rather
-    # than in-row array mins — higher-order lambdas are interpreted
-    # per-element and measured 10× slower on the same cache (34.2 s vs
-    # 3.5 s over 107M shingles at sf1); the explode is a zero-copy
-    # columnar read and map-side combine collapses the groupBy shuffle to
-    # one 16-int row per doc before it moves. The in-row path
-    # (``minhash_signatures_from_packed``) remains the STREAMING
-    # formulation, where a pre-bucket aggregate is illegal.
-    exploded = packed.select("doc_id", F.explode("sh").alias("_z")).select(
-        "doc_id",
-        F.col("_z.s1").alias("shingle"),
-        F.col("_z.s2").alias("shingle2"),
-    )
-    sig = minhash_signatures(exploded, n_hashes=n_hashes, r=r)
-    cand = lsh_candidate_pairs(sig, max_bucket=max_bucket)
-    # the verify's array side also comes from the exploded-from-cache
-    # frame: its collect_list groupBy is whole-stage codegen (1.6 s over
-    # 107M cached shingles at sf1), where projecting the packed arrays via
-    # transform(sh, z -> z.s1) — though shuffle-free — pays the
-    # interpreted lambda per element PER BROADCAST COPY (two join sides ≈
-    # 190 s at sf1, measured end-to-end 526 s vs 330 s).
-    #
-    # materialize the (by-construction small: verified near-dup pairs)
-    # result eagerly and RELEASE the corpus-sized packed cache before
-    # returning — a lazy return would pin gigabytes of cached shingle
-    # arrays for the session's lifetime, squeezing every later query's
-    # memory (measured in-bench: the two queries following this one ran
-    # 2.4× their isolated walls before the release). The function is
-    # therefore eager; callers composing further transforms do so on the
-    # checkpointed pair set, which is the cheap side by design.
-    out = jaccard_verify(
-        cand,
-        exploded,
-        threshold=threshold,
-        broadcast_arrays=broadcast_arrays,
-        shingle_count=n_sh,
-    ).localCheckpoint(eager=True)
-    packed.unpersist()
-    return out
+    try:
+        # signatures: explode FROM THE CACHE into the codegen aggregate
+        # rather than in-row array mins — higher-order lambdas are
+        # interpreted per-element and measured 10× slower on the same
+        # cache (34.2 s vs 3.5 s over 107M shingles at sf1); the explode is
+        # a zero-copy columnar read and map-side combine collapses the
+        # groupBy shuffle to one 16-int row per doc before it moves. The
+        # in-row path (``minhash_signatures_from_packed``) remains the
+        # STREAMING formulation, where a pre-bucket aggregate is illegal.
+        exploded = packed.select("doc_id", F.explode("sh").alias("_z")).select(
+            "doc_id",
+            F.col("_z.s1").alias("shingle"),
+            F.col("_z.s2").alias("shingle2"),
+        )
+        sig = minhash_signatures(exploded, n_hashes=n_hashes, r=r)
+        cand = lsh_candidate_pairs(sig, max_bucket=max_bucket)
+        # the verify's array side also comes from the exploded-from-cache
+        # frame: its collect_list groupBy is whole-stage codegen (1.6 s
+        # over 107M cached shingles at sf1), where projecting the packed
+        # arrays via transform(sh, z -> z.s1) — though shuffle-free — pays
+        # the interpreted lambda per element per join side (≈ 190 s at
+        # sf1 for two sides, measured end-to-end 526 s vs 330 s).
+        #
+        # materialize the (by-construction small: verified near-dup pairs)
+        # result eagerly and RELEASE the corpus-sized packed cache before
+        # returning — a lazy return would pin gigabytes of cached shingle
+        # arrays for the session's lifetime, squeezing every later query's
+        # memory (measured in-bench: the two queries following this one
+        # ran 2.4× their isolated walls before the release). The function
+        # is therefore eager; callers composing further transforms do so
+        # on the checkpointed pair set, which is the cheap side by design.
+        return jaccard_verify(
+            cand,
+            exploded,
+            threshold=threshold,
+            broadcast_arrays=broadcast_arrays,
+            shingle_count=n_sh,
+        ).localCheckpoint(eager=True)
+    finally:
+        packed.unpersist()
 
 
 def minhash_cap_audit(

@@ -170,32 +170,6 @@ def cosine_topk_bruteforce(
     )
 
 
-def random_hyperplane_signatures(
-    vecs: DataFrame,
-    n_planes: int = 16,
-    seed: int = 42,
-    dim: int = 64,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """LSH for cosine: sign-pattern of dot products against n_planes fixed
-    pseudo-random hyperplanes → (vec_id, bucket). Planes are deterministic
-    (hash-based) literals compiled into the plan — no driver-side RNG state,
-    same plan on every executor."""
-    import hashlib
-
-    import numpy as np
-
-    rng = np.random.default_rng(seed)
-    planes = rng.standard_normal((n_planes, dim))
-    sig: Column = F.lit(0).cast("long")
-    for j in range(n_planes):
-        plane = F.array(*[F.lit(float(x)) for x in planes[j]])
-        d = _dot(plane, F.col(vec_col))
-        sig = sig + F.when(d > 0, F.shiftleft(F.lit(1).cast("long"), j)).otherwise(0)
-    return vecs.select(F.col(id_col).alias("vec_id"), sig.alias("bucket"))
-
-
 def multi_table_buckets(n_tables: int, n_planes: int, seed: int, dim: int):
     """Arrow UDF: embedding → array of ``n_tables`` LSH bucket ids, one
     (N, dim) @ (dim, n_tables·n_planes) matmul per batch. A codegen
@@ -737,126 +711,128 @@ def semantic_dedup(
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    # within-cluster pairwise cosine as ONE BLAS gram matrix per cluster
-    # (Arrow kernel) instead of a self-join: the join's shuffle was already
-    # cluster-bounded, but its n²/k cosine evaluations ran one aggregate-HOF
-    # fold per pair in codegen — measured 977 s at 500k×64 (round-7 soak);
-    # X·Xᵀ on the same floats is ~33 GFLOP of matmul. Norms stay the
-    # Spark-computed _nv so only the dot's summation order changes
-    # (pairwise-BLAS vs left-to-right fold — a keep/drop flip needs a pair
-    # within float-ulp of the threshold). Column blocks cap peak memory at
-    # ~256 MB so one skewed mega-cluster cannot OOM its task.
-    id_dt = sided.schema["vec_id"].dataType.simpleString()
-    thr = float(threshold)
+    try:
+        # within-cluster pairwise cosine as ONE BLAS gram matrix per cluster
+        # (Arrow kernel) instead of a self-join: the join's shuffle was already
+        # cluster-bounded, but its n²/k cosine evaluations ran one aggregate-HOF
+        # fold per pair in codegen — measured 977 s at 500k×64 (round-7 soak);
+        # X·Xᵀ on the same floats is ~33 GFLOP of matmul. Norms stay the
+        # Spark-computed _nv so only the dot's summation order changes
+        # (pairwise-BLAS vs left-to-right fold — a keep/drop flip needs a pair
+        # within float-ulp of the threshold). Column blocks cap peak memory at
+        # ~256 MB so one skewed mega-cluster cannot OOM its task.
+        id_dt = sided.schema["vec_id"].dataType.simpleString()
+        thr = float(threshold)
 
-    def _cluster_drops(pdf):
-        import numpy as np
-        import pandas as pd
-
-        pdf = pdf.sort_values("vec_id", kind="mergesort").reset_index(drop=True)
-        n = len(pdf)
-        if n < 2:
-            return pdf[["vec_id"]].iloc[0:0]
-        X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
-        nv = pdf["_nv"].to_numpy(dtype=np.float64)
-        Xn = X / nv[:, None]
-        dropped = np.zeros(n, dtype=bool)
-        blk = max(1, min(n, 33_554_432 // n))
-        rows = np.arange(n)[:, None]
-        for s in range(1, n, blk):
-            e = min(n, s + blk)
-            m = (Xn @ Xn[s:e].T) >= thr
-            m &= rows < np.arange(s, e)[None, :]
-            dropped[s:e] |= m.any(axis=0)
-        return pd.DataFrame({"vec_id": pdf.loc[dropped, "vec_id"]})
-
-    # Lloyd over weakly clustered data leaves SKEWED cluster sizes (sf5
-    # measured: max cluster 104k of 2.5M rows, Σn_c² = 23.5× the uniform
-    # n·target bound), and one-group-per-cluster puts that megacluster's
-    # entire 5.4B-dot gram matrix in ONE single-threaded task — the
-    # measured sf5 straggler. When any cluster exceeds ``pairwise_block``
-    # rows, decompose the pairwise stage into BLOCK-PAIR tasks instead:
-    # row_number-order each cluster by vec_id into blocks of that many
-    # rows; every block pair (bi ≤ bj) becomes one task that marks
-    # right-block rows hit by a ≥-threshold cosine from a lower-id row.
-    # The drop set is EXACTLY the one-task to-the-ulp computation (same
-    # dots, same comparisons, regrouped), but the megacluster's work
-    # spreads over nb·(nb+1)/2 bounded tasks. Data duplication is
-    # n_c·nb rows for an nb-block cluster — only clusters larger than
-    # the block pay it, and the block census is one cheap aggregate on
-    # the already-checkpointed `sided`.
-    # ONE action both materializes the persist (the census consumes every
-    # row of `sided`) and returns the skew statistic — the former separate
-    # sided.count() + census pair paid one extra full-pass job barrier per
-    # query for no information (guide §1/§5: collapse serial actions)
-    max_cluster = (
-        sided.groupBy("centroid").count().agg(F.max("count")).collect()[0][0] or 0
-    )
-    if max_cluster <= pairwise_block:
-        drops = (
-            sided.select("centroid", "vec_id", "_v", "_nv")
-            .groupBy("centroid")
-            .applyInPandas(_cluster_drops, f"vec_id {id_dt}")
-        )
-    else:
-        wcl = Window.partitionBy("centroid").orderBy("vec_id")
-        blocked = sided.select("centroid", "vec_id", "_v", "_nv").withColumn(
-            "_b",
-            ((F.row_number().over(wcl) - F.lit(1)) / F.lit(pairwise_block)).cast("int"),
-        )
-        nbs = blocked.groupBy("centroid").agg(F.max("_b").alias("_nbmax"))
-        exploded = (
-            blocked.join(nbs, "centroid")
-            .withColumn("_ob", F.explode(F.sequence(F.lit(0), F.col("_nbmax"))))
-            .withColumn("_bi", F.least("_b", "_ob"))
-            .withColumn("_bj", F.greatest("_b", "_ob"))
-        )
-
-        def _pair_drops(pdf):
+        def _cluster_drops(pdf):
             import numpy as np
             import pandas as pd
 
-            bi, bj = int(pdf["_bi"].iat[0]), int(pdf["_bj"].iat[0])
-            if bi == bj:
-                return _cluster_drops(pdf)
-            left = pdf[pdf["_b"] == bi]
-            right = pdf[pdf["_b"] == bj]
-            if not len(left) or not len(right):
+            pdf = pdf.sort_values("vec_id", kind="mergesort").reset_index(drop=True)
+            n = len(pdf)
+            if n < 2:
                 return pdf[["vec_id"]].iloc[0:0]
-            # blocks are id-ordered, so every left id < every right id:
-            # only right rows can be dropped by this pair
-            Xl = np.stack([np.asarray(v, dtype=np.float64) for v in left["_v"]])
-            Xl /= left["_nv"].to_numpy(dtype=np.float64)[:, None]
-            Xr = np.stack([np.asarray(v, dtype=np.float64) for v in right["_v"]])
-            Xr /= right["_nv"].to_numpy(dtype=np.float64)[:, None]
-            # same ~256MB column blocking as the one-task kernel
-            hit = np.zeros(len(Xr), dtype=bool)
-            cb = max(1, 33_554_432 // max(1, len(Xl)))
-            for s in range(0, len(Xr), cb):
-                e = min(len(Xr), s + cb)
-                hit[s:e] = ((Xl @ Xr[s:e].T) >= thr).any(axis=0)
-            return pd.DataFrame({"vec_id": right.loc[hit, "vec_id"]})
+            X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_v"]])
+            nv = pdf["_nv"].to_numpy(dtype=np.float64)
+            Xn = X / nv[:, None]
+            dropped = np.zeros(n, dtype=bool)
+            blk = max(1, min(n, 33_554_432 // n))
+            rows = np.arange(n)[:, None]
+            for s in range(1, n, blk):
+                e = min(n, s + blk)
+                m = (Xn @ Xn[s:e].T) >= thr
+                m &= rows < np.arange(s, e)[None, :]
+                dropped[s:e] |= m.any(axis=0)
+            return pd.DataFrame({"vec_id": pdf.loc[dropped, "vec_id"]})
 
-        drops = (
-            exploded.groupBy("centroid", "_bi", "_bj")
-            .applyInPandas(_pair_drops, f"vec_id {id_dt}")
-            .distinct()  # a row may be hit via several block pairs
+        # Lloyd over weakly clustered data leaves SKEWED cluster sizes (sf5
+        # measured: max cluster 104k of 2.5M rows, Σn_c² = 23.5× the uniform
+        # n·target bound), and one-group-per-cluster puts that megacluster's
+        # entire 5.4B-dot gram matrix in ONE single-threaded task — the
+        # measured sf5 straggler. When any cluster exceeds ``pairwise_block``
+        # rows, decompose the pairwise stage into BLOCK-PAIR tasks instead:
+        # row_number-order each cluster by vec_id into blocks of that many
+        # rows; every block pair (bi ≤ bj) becomes one task that marks
+        # right-block rows hit by a ≥-threshold cosine from a lower-id row.
+        # The drop set is EXACTLY the one-task to-the-ulp computation (same
+        # dots, same comparisons, regrouped), but the megacluster's work
+        # spreads over nb·(nb+1)/2 bounded tasks. Data duplication is
+        # n_c·nb rows for an nb-block cluster — only clusters larger than
+        # the block pay it, and the block census is one cheap aggregate on
+        # the already-checkpointed `sided`.
+        # ONE action both materializes the persist (the census consumes every
+        # row of `sided`) and returns the skew statistic — the former separate
+        # sided.count() + census pair paid one extra full-pass job barrier per
+        # query for no information (guide §1/§5: collapse serial actions)
+        max_cluster = (
+            sided.groupBy("centroid").count().agg(F.max("count")).collect()[0][0] or 0
         )
-    # materialize the skinny (vec_id, centroid, keep) result and release
-    # the vector-carrying `sided` cache — returning lazily would pin the
-    # whole embedded corpus in storage memory for the session's lifetime
-    # (same leak-shape as the minhash shingle cache; see
-    # minhash_near_duplicates)
-    out = (
-        sided.select("vec_id", "centroid")
-        .join(drops.withColumn("_drop", F.lit(True)), "vec_id", "left")
-        .select(
-            "vec_id", "centroid", F.coalesce(~F.col("_drop"), F.lit(True)).alias("keep")
+        if max_cluster <= pairwise_block:
+            drops = (
+                sided.select("centroid", "vec_id", "_v", "_nv")
+                .groupBy("centroid")
+                .applyInPandas(_cluster_drops, f"vec_id {id_dt}")
+            )
+        else:
+            wcl = Window.partitionBy("centroid").orderBy("vec_id")
+            blocked = sided.select("centroid", "vec_id", "_v", "_nv").withColumn(
+                "_b",
+                ((F.row_number().over(wcl) - F.lit(1)) / F.lit(pairwise_block)).cast("int"),
+            )
+            nbs = blocked.groupBy("centroid").agg(F.max("_b").alias("_nbmax"))
+            exploded = (
+                blocked.join(nbs, "centroid")
+                .withColumn("_ob", F.explode(F.sequence(F.lit(0), F.col("_nbmax"))))
+                .withColumn("_bi", F.least("_b", "_ob"))
+                .withColumn("_bj", F.greatest("_b", "_ob"))
+            )
+
+            def _pair_drops(pdf):
+                import numpy as np
+                import pandas as pd
+
+                bi, bj = int(pdf["_bi"].iat[0]), int(pdf["_bj"].iat[0])
+                if bi == bj:
+                    return _cluster_drops(pdf)
+                left = pdf[pdf["_b"] == bi]
+                right = pdf[pdf["_b"] == bj]
+                if not len(left) or not len(right):
+                    return pdf[["vec_id"]].iloc[0:0]
+                # blocks are id-ordered, so every left id < every right id:
+                # only right rows can be dropped by this pair
+                Xl = np.stack([np.asarray(v, dtype=np.float64) for v in left["_v"]])
+                Xl /= left["_nv"].to_numpy(dtype=np.float64)[:, None]
+                Xr = np.stack([np.asarray(v, dtype=np.float64) for v in right["_v"]])
+                Xr /= right["_nv"].to_numpy(dtype=np.float64)[:, None]
+                # same ~256MB column blocking as the one-task kernel
+                hit = np.zeros(len(Xr), dtype=bool)
+                cb = max(1, 33_554_432 // max(1, len(Xl)))
+                for s in range(0, len(Xr), cb):
+                    e = min(len(Xr), s + cb)
+                    hit[s:e] = ((Xl @ Xr[s:e].T) >= thr).any(axis=0)
+                return pd.DataFrame({"vec_id": right.loc[hit, "vec_id"]})
+
+            drops = (
+                exploded.groupBy("centroid", "_bi", "_bj")
+                .applyInPandas(_pair_drops, f"vec_id {id_dt}")
+                .distinct()  # a row may be hit via several block pairs
+            )
+        # materialize the skinny (vec_id, centroid, keep) result and release
+        # the vector-carrying `sided` cache (in the finally, so a failure
+        # releases it too) — returning lazily would pin the whole embedded
+        # corpus in storage memory for the session's lifetime (same
+        # leak-shape as the minhash shingle cache; see
+        # minhash_near_duplicates)
+        return (
+            sided.select("vec_id", "centroid")
+            .join(drops.withColumn("_drop", F.lit(True)), "vec_id", "left")
+            .select(
+                "vec_id", "centroid", F.coalesce(~F.col("_drop"), F.lit(True)).alias("keep")
+            )
+            .localCheckpoint(eager=True)
         )
-        .localCheckpoint(eager=True)
-    )
-    sided.unpersist()
-    return out
+    finally:
+        sided.unpersist()
 
 
 def cosine_near_duplicates(
@@ -990,19 +966,20 @@ def cosine_near_duplicates_lsh(
     exact cosine verification ≥ threshold → (d1, d2, cosine), d1 < d2.
 
     ``broadcast_vectors``: the verify join ships two full vectors per
-    candidate, and the (cand ⋈ d1-vector) intermediate re-shuffles on d2 —
-    the pipeline's dominant shuffle when candidates are dense (the same
-    fat-intermediate shape as ``jaccard_verify``; see its docstring).
-    None (auto) hints both vector joins broadcast when count×dim (× both
-    sides × hash-relation overhead, via ``_heap.fits_broadcast``) sits an
-    order of magnitude under min(driver, executor) memory — then
-    candidates stream through two map-side hash joins and the fat
-    intermediate never touches a shuffle. Corpus-scale runs fall back to
-    plain shuffled joins (AQE may still convert at runtime); an
-    unparseable memory setting means fall back, never assume a size.
+    candidate, and a shuffled (cand ⋈ d1-vector) intermediate re-shuffles
+    on d2 — the pipeline's dominant shuffle when candidates are dense (the
+    same fat-intermediate shape as ``jaccard_verify``; see its docstring).
+    The join runs the LSH verify-join plan shared with ``jaccard_verify``
+    (``_heap.verify_chunks`` / ``_heap.verify_join``): None (auto) takes
+    the HYBRID plan — the d1 join shuffled, the d2 vectors broadcast in as
+    many hash chunks as count×(dim·8 + 64) B needs under every broadcast
+    cap, so the fat intermediate never touches a shuffle. An unknown
+    memory budget, or more chunks than the cap, takes plain shuffled
+    joins; False forces them; any other value raises.
     NOTE auto runs one count() job on ``vecs`` — a direct caller with an
-    unmaterialized input pays its subtree twice; pass ``n_vectors`` (or
-    an explicit ``broadcast_vectors``) to skip the census.
+    unmaterialized input pays its subtree twice; pass ``n_vectors`` (an
+    upper bound is fine: it can only add a chunk) or
+    ``broadcast_vectors=False`` to skip the census.
 
     Defaults (r=8, b=8) target HIGH thresholds: at cos 0.98 a band matches
     with 0.59 → recall ≈ 1 − 0.41⁸ ≈ 0.999; at cos 0.9 recall ≈ 0.94; by
@@ -1047,16 +1024,14 @@ def cosine_near_duplicates_lsh(
         .filter(F.col("_nb") >= int(min_bands))
         .select("d1", "d2")
     )
-    if broadcast_vectors is None:
-        from periodicity_spark.pipeline._heap import fits_broadcast
+    from periodicity_spark.pipeline import _heap
 
-        n_v = n_vectors if n_vectors is not None else vecs.count()
-        # payload: the vector doubles + norm + id per row; two relation
-        # copies (d1 and d2 join sides)
-        broadcast_vectors = fits_broadcast(
-            vecs.sparkSession, n_v * (dim * 8 + 64), copies=2
-        )
-    side = (lambda df: F.broadcast(df)) if broadcast_vectors else (lambda df: df)
+    # payload: the vector doubles + norm + id per row
+    n_chunks = _heap.verify_chunks(
+        vecs.sparkSession,
+        broadcast_vectors,
+        lambda: (n_vectors if n_vectors is not None else vecs.count()) * (dim * 8 + 64),
+    )
     # the verify arithmetic runs once per CANDIDATE pair — unrolled
     # codegen dot/norm at the known dim instead of interpreted HOF folds
     # (bit-identical: same seed/element order, fold fallback off-dim)
@@ -1071,8 +1046,7 @@ def cosine_near_duplicates_lsh(
         _norm_expr(vec_col, dim).alias("_n2"),
     )
     return (
-        cand.join(side(va), "d1")
-        .join(side(vb), "d2")
+        _heap.verify_join(cand, va, vb, n_chunks)
         .select(
             "d1",
             "d2",

@@ -14,7 +14,8 @@ from pyspark.sql import SparkSession
 
 
 def get_spark(app_name: str = "periodicity_spark", shuffle_partitions: int | None = None) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    # default: the cores this process may run on (its CPU affinity)
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
     if shuffle_partitions is None:
         # SPARK_SHUFFLE_PARTITIONS: scale-soak knob — big-shuffle stages at
         # sf1+ want 2-3× cores so each task's hash map fits its memory

@@ -101,7 +101,8 @@ def psort_by_prominence(pg: DataFrame, k: int | None = None) -> DataFrame:
     prominence DESC (NaN first, Spark's desc-NaN rule), frequency ASC — is
     the row_number window's exact ordering on the same float64s, so the
     selected rows and ranks are bit-identical (differential-pinned in
-    tests/test_spectral_extras.py against the windowed formulation)."""
+    tests/test_spectral_extras.py against the windowed formulation).
+    A negative ``k`` raises ValueError."""
     if k is None:
         from periodicity_spark.operators.windows import find_peaks_prominence
 
@@ -121,6 +122,10 @@ def psort_by_prominence(pg: DataFrame, k: int | None = None) -> DataFrame:
     from periodicity_spark.session import grouped_apply
 
     kk = int(k)
+    if kk < 0:
+        # the windowed formulation (rank <= k) keeps no rows for k < 0,
+        # while the kernel's order[:k] would keep all but the last -k
+        raise ValueError(f"psort_by_prominence k must be >= 0, got {k}")
     out_schema = (
         "series_id string, rank int, frequency double, power double,"
         " prominence double"

@@ -1,9 +1,10 @@
-"""Broadcast-budget helper (`pipeline._heap`): the shared sizing logic
-behind jaccard_verify's and cosine_near_duplicates_lsh's auto-broadcast
-decision. The contract under test: budgets key on the BINDING heap
+"""Verify-join plan and broadcast budget (`pipeline._heap`): the shared
+sizing logic behind jaccard_verify's and cosine_near_duplicates_lsh's
+verify join. The contract under test: budgets key on the BINDING heap
 (driver in local mode, min(driver, executor) on a cluster), unparseable
-memory strings mean "unknown → never broadcast", and the mode strings
-that route the semantic-dedup scale path fail loudly on typos."""
+memory strings mean "unknown → never broadcast", the chunk count is
+ceil(payload / allowance) up to a cap, and the mode strings that route
+the semantic-dedup scale path fail loudly on typos."""
 
 from __future__ import annotations
 
@@ -12,10 +13,12 @@ import pytest
 from periodicity_spark.pipeline._heap import (
     HASH_RELATION_OVERHEAD,
     SAFETY_FRACTION,
+    MAX_VERIFY_CHUNKS,
+    RESULT_SIZE_OVERHEAD,
     broadcast_budget,
-    fits_broadcast,
     max_single_broadcast,
     parse_mem,
+    verify_chunks,
 )
 
 
@@ -97,54 +100,76 @@ def test_budget_unparseable_memory_disables_broadcast():
     ):
         sp = _FakeSpark(**settings)
         assert broadcast_budget(sp) == 0
-        assert fits_broadcast(sp, 1) is False  # even one byte: unknown heap
+        assert max_single_broadcast(sp) == 0.0  # unknown heap: no chunk at all
 
 
-def test_fits_broadcast_margins():
+def test_max_single_broadcast_margins():
     # maxResultSize 0 = unlimited, isolating the heap-budget margins
     sp = _FakeSpark(**{"spark.master": "local[4]", "spark.driver.memory": "10g",
                        "spark.driver.maxResultSize": "0"})
     budget = 10 * 2**30
     limit = budget * SAFETY_FRACTION / HASH_RELATION_OVERHEAD
-    assert fits_broadcast(sp, limit * 0.9)
-    assert not fits_broadcast(sp, limit * 1.1)
-    # two relation copies halve the allowance
-    assert fits_broadcast(sp, limit * 0.45, copies=2)
-    assert not fits_broadcast(sp, limit * 0.55, copies=2)
+    # one relation copy at a time: the hybrid plan broadcasts only d2
+    assert max_single_broadcast(sp) == pytest.approx(limit)
 
 
-def test_fits_broadcast_gated_by_collect_cap_and_hard_table_limit():
+def test_max_single_broadcast_gated_by_collect_cap_and_hard_table_limit():
     # the broadcast BUILD collects each relation to the driver (capped by
     # spark.driver.maxResultSize) and the built table has Spark's HARD
     # 8 GiB limit — the sf5 packed-array relation (4.3 GB raw) hit BOTH
     # in sequence (1 GB default collect cap; then, raised, the 8.0 GiB
-    # table abort in an 80 GiB heap). The heuristic must refuse it under
-    # every setting: it can never single-broadcast.
+    # table abort in an 80 GiB heap). The allowance must refuse it as one
+    # relation under every setting.
     base = {"spark.master": "local[32]", "spark.driver.memory": "80g"}
     gb = 2**30
     for mrs in ("1g", "16g", "0", "plenty"):
         sp = _FakeSpark(**base, **{"spark.driver.maxResultSize": mrs})
-        assert not fits_broadcast(sp, 4.3 * gb, copies=2), mrs
-        # ...but max_single_broadcast still reports a positive chunk
-        # allowance (except under the unparseable cap = unknown)
+        assert max_single_broadcast(sp) < 4.3 * gb, mrs
+        # ...but still reports a positive chunk allowance (except under
+        # the unparseable cap = unknown)
         if mrs != "plenty":
             assert max_single_broadcast(sp) > 0.9 * gb, mrs
         else:
             assert max_single_broadcast(sp) == 0.0
-    # sf1-shaped payload (858 MB/copy raw) still clears the DEFAULT cap
-    # with the serialized-row margin — the regime that demonstrably
-    # worked under the 1 GB cap must keep broadcasting
+    # the collect cap binds a big heap under the DEFAULT 1 GB cap, with
+    # the serialized-row margin: sf1's 858 MB relation fits one chunk
     dflt = _FakeSpark(**{"spark.master": "local[32]",
                          "spark.driver.memory": "48g"})
-    assert fits_broadcast(dflt, 0.84 * gb, copies=2)
-    assert not fits_broadcast(dflt, 0.95 * gb, copies=2)
+    assert max_single_broadcast(dflt) == pytest.approx(gb / RESULT_SIZE_OVERHEAD)
+    assert 0.84 * gb < max_single_broadcast(dflt) < 0.95 * gb
     # the hard table cap binds even a huge heap with an unlimited collect
     big = _FakeSpark(**{"spark.master": "local[32]",
                         "spark.driver.memory": "512g",
                         "spark.driver.maxResultSize": "0"})
-    assert not fits_broadcast(big, 4.0 * gb)
-    assert fits_broadcast(big, 3.5 * gb)
+    assert 3.5 * gb < max_single_broadcast(big) < 4.0 * gb
     assert max_single_broadcast(big) == pytest.approx(8 * 0.9 * gb / 2.0)
+
+
+def test_verify_chunks_plan():
+    """The one verify-join plan: ceil(payload / allowance) hybrid chunks;
+    0 (plain shuffled) on an unknown budget — without running the census
+    — past the chunk cap, or when forced with False. Only None and False
+    are accepted."""
+    gb = 2**30
+    sp = _FakeSpark(**{"spark.master": "local[4]", "spark.driver.memory": "48g"})
+    allow = max_single_broadcast(sp)
+    assert verify_chunks(sp, None, lambda: 0) == 1
+    assert verify_chunks(sp, None, lambda: allow) == 1
+    assert verify_chunks(sp, None, lambda: allow * 1.01) == 2
+    # sf1's length bound (~1.14 GiB) over the default-cap allowance
+    assert verify_chunks(sp, None, lambda: 1.14 * gb) == 2
+    assert verify_chunks(sp, None, lambda: allow * MAX_VERIFY_CHUNKS) == MAX_VERIFY_CHUNKS
+    assert verify_chunks(sp, None, lambda: allow * MAX_VERIFY_CHUNKS + 1) == 0
+
+    def no_census():
+        raise AssertionError("census ran although the plan was already decided")
+
+    assert verify_chunks(sp, False, no_census) == 0
+    unknown = _FakeSpark(**{"spark.master": "local[4]", "spark.driver.memory": "lots"})
+    assert verify_chunks(unknown, None, no_census) == 0
+    for bad in (True, 0, 1, 3, "auto", "broadcast"):
+        with pytest.raises(ValueError, match="None"):
+            verify_chunks(sp, bad, no_census)
 
 
 def test_real_session_budget_positive(spark):

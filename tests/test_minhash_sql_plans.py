@@ -71,8 +71,9 @@ def _old_lsh_candidate_pairs(signatures, max_bucket=1000):
     )
 
 
-def _old_jaccard_verify_broadcast(candidates, shingles, threshold):
-    """Verbatim pre-r11 Column build of the broadcast array-verify plan."""
+def _old_jaccard_verify_hybrid(candidates, shingles, threshold):
+    """Pre-r11 Column build of the array verify, in the auto plan's
+    one-chunk hybrid shape: d1 join unhinted (shuffled), d2 broadcast."""
     arrs = shingles.groupBy("doc_id").agg(
         F.collect_list("shingle").alias("_a"),
         F.count(F.lit(1)).alias("_n"),
@@ -107,7 +108,7 @@ def _old_jaccard_verify_broadcast(candidates, shingles, threshold):
         F.col("_n").alias("_n2"),
     )
     return _pair_jaccard(
-        candidates.join(F.broadcast(a1), "d1").join(F.broadcast(a2), "d2")
+        candidates.join(a1, "d1").join(F.broadcast(a2), "d2")
     )
 
 
@@ -129,8 +130,8 @@ def test_jaccard_verify_sql_build_plan_identical(spark, sf_dir):
     sh = dedup.char_shingles(_docs(spark, sf_dir), k=5)
     sig = dedup.minhash_signatures(sh)
     cand = dedup.lsh_candidate_pairs(sig)
-    ref = _old_jaccard_verify_broadcast(cand, sh, threshold=0.4)
-    new = dedup.jaccard_verify(cand, sh, threshold=0.4, broadcast_arrays=True)
+    ref = _old_jaccard_verify_hybrid(cand, sh, threshold=0.4)
+    new = dedup.jaccard_verify(cand, sh, threshold=0.4)  # auto: one chunk here
     assert _canon(new) == _canon(ref)
 
 

@@ -568,26 +568,94 @@ def test_minhash_signatures_per_row_equals_aggregate_path(spark):
     assert sa == sb and len(sa) > 0
 
 
-def test_minhash_verify_hybrid_equals_broadcast_and_shuffled(spark):
-    """The three physical verify plans — both-sides broadcast, hybrid
-    (shuffled d1 + hash-chunked broadcast d2), and plain shuffled — must
+def _verify_plan_runs(monkeypatch, run, payload):
+    """run(mode) in every verify-join plan: auto at its natural one chunk,
+    auto at three chunks (the broadcast allowance shrunk to payload/2.5),
+    auto under an unknown budget (allowance 0 → shuffled), and False.
+    Asserts the chunk count each run's plan chose."""
+    from periodicity_spark.pipeline import _heap
+
+    chunks: list[int] = []
+    real = _heap.verify_chunks
+
+    def spy(*args):
+        chunks.append(real(*args))
+        return chunks[-1]
+
+    monkeypatch.setattr(_heap, "verify_chunks", spy)
+    runs = [run(None)]
+    for allow in (payload / 2.5, 0.0):
+        with monkeypatch.context() as m:
+            m.setattr(_heap, "max_single_broadcast", lambda sp: allow)
+            runs.append(run(None))
+    runs.append(run(False))
+    assert chunks == [1, 3, 0, 0]
+    return runs
+
+
+def test_minhash_verify_hybrid_equals_broadcast_and_shuffled(spark, monkeypatch):
+    """The verify plans — hybrid (shuffled d1 + hash-chunked broadcast d2)
+    at one chunk and at three, and plain shuffled, auto or forced — must
     produce the identical pair multiset: each candidate pair lands in
-    exactly one d2-hash chunk, so the chunk union is the same set. This
-    is the gate for the sf5 regime, where the packed corpus exceeds
-    Spark's hard 8 GiB broadcast-table limit and the hybrid plan is the
-    only disk-feasible option."""
+    exactly one d2-hash chunk, so the chunk union is the same set. Three
+    chunks are forced by shrinking ``_heap.max_single_broadcast``, the
+    way the regime where the packed corpus exceeds one broadcast
+    relation's caps (Spark's hard 8 GiB table limit, the driver collect
+    cap) is reached."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    runs = {
-        mode: sorted(
+
+    def run(mode):
+        return sorted(
             (r.d1, r.d2, round(r.jaccard, 12))
             for r in dedup.minhash_near_duplicates(
                 docs, threshold=0.4, broadcast_arrays=mode
             ).collect()
         )
-        for mode in (True, 3, 1, False)
-    }
-    assert runs[True] == runs[3] == runs[1] == runs[False]
-    assert len(runs[True]) > 0
+
+    payload = 8 * dedup._shingle_census_bound(docs, "text", 5)
+    runs = _verify_plan_runs(monkeypatch, run, payload)
+    assert all(r == runs[0] for r in runs)
+    assert len(runs[0]) > 0
+
+
+def test_cosine_verify_chunked_equals_one_chunk_and_shuffled(spark, emb, monkeypatch):
+    """cosine_near_duplicates_lsh runs the same verify-join plan: one
+    chunk, three chunks, and shuffled (unknown budget or forced) must
+    return the identical pair multiset. Each vector gets an exact twin,
+    so every plan has pairs to agree on."""
+    vecs = emb.select(
+        "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
+    )
+    twins = vecs.select((F.col("vec_id") + 10_000_000).alias("vec_id"), "embedding")
+    corpus = vecs.unionByName(twins).localCheckpoint(eager=True)
+
+    def run(mode):
+        out = simsearch.cosine_near_duplicates_lsh(
+            corpus, threshold=0.99, n_planes=240, bands=10, min_bands=2,
+            broadcast_vectors=mode,
+        )
+        return sorted((r.d1, r.d2, round(r.cosine, 12)) for r in out.collect())
+
+    runs = _verify_plan_runs(monkeypatch, run, corpus.count() * (64 * 8 + 64))
+    assert all(r == runs[0] for r in runs)
+    assert len(runs[0]) >= emb.count() // 2
+
+
+def test_lsh_verify_flags_accept_only_auto_and_false(spark):
+    """The verify flags take None (auto) or False; the former both-sides
+    broadcast (True) and forced-chunk (int) forms raise."""
+    docs = spark.createDataFrame(
+        [(1, "the same text here"), (2, "the same text here")],
+        "doc_id long, text string",
+    )
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [1.0, 0.0])], "vec_id long, embedding array<double>"
+    )
+    for bad in (True, 3):
+        with pytest.raises(ValueError, match="None"):
+            dedup.minhash_near_duplicates(docs, broadcast_arrays=bad)
+        with pytest.raises(ValueError, match="None"):
+            simsearch.cosine_near_duplicates_lsh(vecs, dim=2, broadcast_vectors=bad)
 
 
 def test_char_shingles_packed_equals_exploded(spark):
@@ -737,8 +805,41 @@ def test_remove_boilerplate_preserves_order_and_within_doc_repeats(spark):
     assert out[2]["text"] == "other" and out[2]["n_removed"] == 1
 
 
+def _jaccard_verify_rows(candidates, shingles, threshold=0.0):
+    """Row-join reference for jaccard_verify (formerly its
+    strategy="rows"): intersection via shingle equi-join; sizes via one
+    aggregate. It never materializes a per-doc row wider than one
+    shingle."""
+    sizes = shingles.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
+    s1 = shingles.select(F.col("doc_id").alias("d1"), "shingle")
+    s2 = shingles.select(F.col("doc_id").alias("_d2"), F.col("shingle").alias("_sh2"))
+    inter = (
+        candidates.join(s1, "d1")
+        .join(s2, (F.col("d2") == F.col("_d2")) & (F.col("shingle") == F.col("_sh2")))
+        .groupBy("d1", "d2")
+        .agg(F.count(F.lit(1)).alias("n_both"))
+    )
+    z1 = sizes.select(F.col("doc_id").alias("d1"), F.col("n_sh").alias("n1"))
+    z2 = sizes.select(F.col("doc_id").alias("d2"), F.col("n_sh").alias("n2"))
+    out = (
+        inter.join(z1, "d1")
+        .join(z2, "d2")
+        .select(
+            "d1",
+            "d2",
+            (
+                F.col("n_both")
+                / (F.col("n1") + F.col("n2") - F.col("n_both")).cast("double")
+            ).alias("jaccard"),
+        )
+    )
+    if threshold > 0:
+        out = out.filter(F.col("jaccard") >= threshold)
+    return out
+
+
 def test_jaccard_verify_strategies_agree(spark):
-    """The array-intersect verify (default) and the row-join verify must
+    """The array-intersect verify and the row-join reference must
     produce identical (d1, d2, jaccard) sets — same pairs, exact same
     double values."""
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
@@ -747,20 +848,18 @@ def test_jaccard_verify_strategies_agree(spark):
         dedup.minhash_signatures(sh, n_hashes=16, r=4)
     )
     a = (
-        dedup.jaccard_verify(cand, sh, strategy="array")
+        dedup.jaccard_verify(cand, sh)
         .toPandas()
         .sort_values(["d1", "d2"], ignore_index=True)
     )
     b = (
-        dedup.jaccard_verify(cand, sh, strategy="rows")
+        _jaccard_verify_rows(cand, sh)
         .toPandas()
         .sort_values(["d1", "d2"], ignore_index=True)
     )
     assert len(a) == len(b) > 0
     assert (a["d1"] == b["d1"]).all() and (a["d2"] == b["d2"]).all()
     assert (a["jaccard"] == b["jaccard"]).all(), "jaccard values diverge"
-    with pytest.raises(ValueError, match="strategy"):
-        dedup.jaccard_verify(cand, sh, strategy="nope")
 
 
 def test_remove_boilerplate_random_differential(spark):
@@ -810,23 +909,23 @@ def test_remove_boilerplate_random_differential(spark):
 
 
 def test_jaccard_verify_zero_overlap_pair_omitted_by_both_strategies(spark):
-    """A candidate pair sharing ZERO shingles must be absent from BOTH
-    strategies' output at threshold=0: the rows strategy's inner equi-join
-    can never emit it, and the array strategy now filters n_both > 0
-    instead of emitting a jaccard=0.0 row (r6 ADVICE: the divergence broke
-    the bit-identical contract)."""
+    """A candidate pair sharing ZERO shingles must be absent from both the
+    array verify's and the row-join reference's output at threshold=0:
+    the reference's inner equi-join can never emit it, and the array
+    verify filters n_both > 0 instead of emitting a jaccard=0.0 row (r6
+    ADVICE: the divergence broke the bit-identical contract)."""
     sh = spark.createDataFrame(
         [(1, "aaaaa"), (1, "bbbbb"), (2, "ccccc"), (2, "ddddd"), (3, "aaaaa")],
         "doc_id long, shingle string",
     )
     cand = spark.createDataFrame([(1, 2), (1, 3)], "d1 long, d2 long")
-    for strategy in ("array", "rows"):
+    for name, verify in (("array", dedup.jaccard_verify), ("rows", _jaccard_verify_rows)):
         got = {
             (r["d1"], r["d2"]): r["jaccard"]
-            for r in dedup.jaccard_verify(cand, sh, strategy=strategy).collect()
+            for r in verify(cand, sh).collect()
         }
-        assert (1, 2) not in got, f"{strategy}: zero-overlap pair emitted"
-        assert got == {(1, 3): pytest.approx(0.5)}, strategy
+        assert (1, 2) not in got, f"{name}: zero-overlap pair emitted"
+        assert got == {(1, 3): pytest.approx(0.5)}, name
 
 
 def test_keep_canonical_no_forced_broadcast_hint(spark):
@@ -1207,9 +1306,9 @@ def test_char_shingles_ascii_fast_path_equals_codepoint_path(spark):
 
 
 def test_shingle_census_bound_bounds_exact_census(spark, sf_dir):
-    """r11: minhash_near_duplicates sizes its verify broadcast with a
-    length-derived upper bound instead of the exact shingle census (the
-    exact census ran the whole shingle transform as a standalone job).
+    """minhash_near_duplicates sizes its verify chunks with a
+    length-derived upper bound instead of the exact shingle census (an
+    exact census runs the whole shingle transform as a standalone job).
     The bound must dominate the exact distinct-shingle count on real data
     and every degenerate shape, and be 0 exactly when no shingles exist."""
     from pyspark.sql import functions as F
@@ -1238,46 +1337,54 @@ def test_shingle_census_bound_bounds_exact_census(spark, sf_dir):
     assert dedup._shingle_census_bound(empty, "text", k) == 0
 
 
-def test_minhash_census_two_tier_routing(spark, sf_dir, monkeypatch):
-    """r11 regression pin: the length bound is ACTED ON only when it
-    clears every broadcast gate (conservative bound passes ⇒ true payload
-    passes). When the bound fails a gate, the pipeline must fall back to
-    the EXACT census and let the verify gate size the plan from it — not
-    demote the plan off the inflated bound. The sf1 regression this
-    guards: the 858 MB packed relation collects under the 1 GB
-    maxResultSize cap, its ~1.4× length bound does not, and acting on the
-    bound demoted a working broadcast to the 1.57×-slower hybrid."""
+def test_minhash_verify_chunks_sized_from_census_bound(spark, sf_dir, monkeypatch):
+    """minhash_near_duplicates sizes its verify chunks from the scan-only
+    length bound: one bound scan and exactly one plan decision, on 8 B ×
+    the bound. A forced False skips the bound scan too."""
     import periodicity_spark.pipeline._heap as _heap
-    from periodicity_spark.pipeline import dedup
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    bound = dedup._shingle_census_bound(docs, "text", 5)
+    calls: list[tuple] = []
+    real = _heap.verify_chunks
 
-    # 1. bound passes (real session, tiny corpus): exactly one gate probe,
-    #    on the bound payload — no exact-census job is needed
-    calls: list[float] = []
-    real = _heap.fits_broadcast
+    def probe(sp, mode, payload_bytes):
+        calls.append((mode, payload_bytes() if mode is None else None))
+        return real(sp, mode, payload_bytes)
 
-    def probe(sp, payload, copies=1):
-        calls.append(payload)
-        return real(sp, payload, copies=copies)
+    scans: list[int] = []
+    real_bound = dedup._shingle_census_bound
 
-    monkeypatch.setattr(_heap, "fits_broadcast", probe)
-    base = dedup.minhash_near_duplicates(docs, threshold=0.4)
-    base_rows = sorted(map(tuple, base.collect()))
-    assert len(calls) == 1
+    def bound_probe(*args):
+        scans.append(real_bound(*args))
+        return scans[-1]
 
-    # 2. bound fails (forced): the exact census must run and feed the
-    #    verify gate — its payload probe is strictly below the bound's —
-    #    and the pair set must be identical whichever plan the gate picks
-    calls2: list[float] = []
+    monkeypatch.setattr(_heap, "verify_chunks", probe)
+    monkeypatch.setattr(dedup, "_shingle_census_bound", bound_probe)
+    dedup.minhash_near_duplicates(docs, threshold=0.4)
+    assert calls == [(None, 8 * bound)] and scans == [bound]
+    calls.clear()
+    scans.clear()
+    dedup.minhash_near_duplicates(docs, threshold=0.4, broadcast_arrays=False)
+    assert calls == [(False, None)] and scans == []
 
-    def probe_fail_first(sp, payload, copies=1):
-        calls2.append(payload)
-        if len(calls2) == 1:
-            return False  # simulate the bound tripping a gate
-        return real(sp, payload, copies=copies)
 
-    monkeypatch.setattr(_heap, "fits_broadcast", probe_fail_first)
-    forced = dedup.minhash_near_duplicates(docs, threshold=0.4)
-    assert sorted(map(tuple, forced.collect())) == base_rows
-    assert len(calls2) >= 2 and calls2[1] <= calls2[0]
+def test_lsh_pipelines_release_caches_on_failure(spark, sf_dir, emb, monkeypatch):
+    """minhash_near_duplicates (packed shingles) and semantic_dedup (the
+    vector-carrying cluster assignment) persist corpus-sized caches; a
+    failure after the persist must still release them. The failure is
+    injected at each function's final eager checkpoint."""
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    cache = spark._jsparkSession.sharedState().cacheManager()
+
+    def boom(self, *a, **k):
+        raise RuntimeError("injected failure")
+
+    spark.catalog.clearCache()
+    monkeypatch.setattr(type(docs), "localCheckpoint", boom)
+    with pytest.raises(RuntimeError, match="injected"):
+        dedup.minhash_near_duplicates(docs, threshold=0.4)
+    assert cache.isEmpty(), "minhash_near_duplicates left a cached plan"
+    with pytest.raises(RuntimeError, match="injected"):
+        simsearch.semantic_dedup(emb, threshold=0.9)
+    assert cache.isEmpty(), "semantic_dedup left a cached plan"

@@ -163,6 +163,25 @@ def test_psort_fused_topk_matches_windowed_formulation(spark, sf_dir):
     assert _canon(got) == _canon(want)
 
 
+def test_psort_by_prominence_rejects_negative_k(spark):
+    """k < 0 raises: the windowed formulation (rank <= k) keeps no rows,
+    while the fused kernel's order[:k] would keep all but the last |k|
+    peaks. k = 0 keeps none on both."""
+    from periodicity_spark.spectral.periodogram_ops import psort_by_prominence
+
+    pg = spark.createDataFrame(
+        pd.DataFrame({
+            "series_id": "s",
+            "frequency": [0.1, 0.2, 0.3, 0.4, 0.5],
+            "power": [0.0, 2.0, 0.0, 1.0, 0.0],
+        })
+    )
+    with pytest.raises(ValueError, match="k must be >= 0"):
+        psort_by_prominence(pg, k=-1)
+    assert psort_by_prominence(pg, k=0).count() == 0
+    assert psort_by_prominence(pg, k=2).count() == 2
+
+
 def test_gls_arrow_matches_crossjoin_path(spark):
     """The Arrow per-series GLS strategy must be numerically identical to
     the distributed crossJoin path (1e-9) with the same NULL pattern, on

@@ -1,18 +1,17 @@
 """Forced-fallback equivalence check for the LSH verify joins.
 
-The auto-broadcast heuristic (`_heap.fits_broadcast`) gives the verify
-joins two physical plans: broadcast hash joins (the single-box scale
-path) and plain shuffled joins (the path a real multi-executor cluster
-takes when the payload exceeds executor heaps). The broadcast plan has
-full-scale soak evidence; this tool produces the same-scale evidence for
-the FALLBACK branch by running both plans on the same inputs and
-asserting multiset-equal pair sets, Spark-side (exceptAll both ways — no
-driver materialization).
+Both verify joins run one plan (`pipeline/_heap.py`): auto takes the
+hybrid plan (shuffled d1 join, d2 side broadcast in hash chunks sized by
+`_heap.verify_chunks`), and False forces plain shuffled joins (the path
+a real multi-executor cluster takes when even one chunk exceeds executor
+heaps). This tool runs both modes on the same inputs and asserts
+multiset-equal pair sets, Spark-side (exceptAll both ways — no driver
+materialization).
 
-Run it with SPARK_IO_CODEC=zstd at sf1+: the non-broadcast verify is
-exactly the fat candidate×payload shuffle the broadcast plan exists to
-kill (~120 GB under lz4 at sf1, which exceeds this box's free disk;
-zstd compresses the highly-repetitive shingle arrays ~3-4×).
+Run it with SPARK_IO_CODEC=zstd at sf1+: the shuffled verify is exactly
+the fat candidate×payload shuffle the hybrid plan exists to kill
+(~120 GB under lz4 at sf1, which exceeds a single box's free disk; zstd
+compresses the highly-repetitive shingle arrays ~3-4×).
 
 Usage: python tools/fallback_check.py SF_DIR OUT.json
 """
@@ -48,7 +47,7 @@ def main() -> int:
         ).stdout.strip(),
     }
 
-    # ---- minhash verify: broadcast vs shuffled, same candidates ----
+    # ---- minhash verify: auto (hybrid) vs shuffled, same candidates ----
     docs = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
     sh = dedup.char_shingles(docs, k=5).persist(StorageLevel.MEMORY_AND_DISK)
     n_sh = sh.count()
@@ -56,7 +55,7 @@ def main() -> int:
     cand = dedup.lsh_candidate_pairs(sig).localCheckpoint(eager=True)
     t0 = time.time()
     on = dedup.jaccard_verify(
-        cand, sh, threshold=0.4, broadcast_arrays=True
+        cand, sh, threshold=0.4, shingle_count=n_sh
     ).localCheckpoint(eager=True)
     w_on = round(time.time() - t0, 1)
     t0 = time.time()
@@ -69,19 +68,19 @@ def main() -> int:
     results["minhash_verify"] = {
         "shingles": n_sh,
         "candidates": cand.count(),
-        "pairs_broadcast": on.count(),
+        "pairs_auto": on.count(),
         "pairs_fallback": off.count(),
         "multiset_diff": diff,
-        "wall_broadcast_sec": w_on,
+        "wall_auto_sec": w_on,
         "wall_fallback_sec": w_off,
     }
     print(f"# minhash: {results['minhash_verify']}", file=sys.stderr)
 
-    # ---- cosine verify: broadcast vs shuffled, same signature seed ----
+    # ---- cosine verify: auto (hybrid) vs shuffled, same signature seed ----
     emb = spark.read.parquet(os.path.join(sf_dir, "embeddings.parquet"))
     t0 = time.time()
     von = simsearch.cosine_near_duplicates_lsh(
-        emb, threshold=0.9, broadcast_vectors=True
+        emb, threshold=0.9
     ).localCheckpoint(eager=True)
     w_on = round(time.time() - t0, 1)
     t0 = time.time()
@@ -91,10 +90,10 @@ def main() -> int:
     w_off = round(time.time() - t0, 1)
     vdiff = von.exceptAll(voff).count() + voff.exceptAll(von).count()
     results["cosine_verify"] = {
-        "pairs_broadcast": von.count(),
+        "pairs_auto": von.count(),
         "pairs_fallback": voff.count(),
         "multiset_diff": vdiff,
-        "wall_broadcast_sec": w_on,
+        "wall_auto_sec": w_on,
         "wall_fallback_sec": w_off,
     }
     print(f"# cosine: {results['cosine_verify']}", file=sys.stderr)
