@@ -34,7 +34,7 @@ from periodicity_spark.pipeline import dedup, simsearch, text as text_ops
 from periodicity_spark.pipeline import sample as sample_ops
 from periodicity_spark.pipeline import sketch as sketch_ops
 from periodicity_spark.pipeline.multimodal import extract_features
-from periodicity_spark.session import persisted, persisted_lazy
+from periodicity_spark.session import persisted, persisted_lazy, scan_parallel
 from periodicity_spark.sources.ingest import (
     events_with_time,
     load_table,
@@ -66,13 +66,14 @@ PERIOD_GRID = [0.5 + 0.25 * j for j in range(20)]
 PERIOD_GRID_SQL = "grid AS (SELECT 0.5 + 0.25 * unnest(range(20)) AS period)"
 
 
-# Memo of the three entry DataFrames per (session, sf_dir). DataFrames are
+# Memo of the entry DataFrames per (session, sf_dir). DataFrames are
 # immutable plan handles — reusing one object across queries caches NOTHING
 # about its results (every action still scans parquet); it only skips
 # rebuilding the identical unresolved plan over py4j for each of ~45 bench
-# queries (~0.1-0.2 s of driver round-trips per build, guide §5) and lets
-# scan_parallel's partition probe reuse the Dataset's cached RDD instead of
-# re-planning the subtree cold (~0.1-0.5 s per probe).
+# queries (~0.1-0.2 s of driver round-trips per build, guide §5), and a
+# scan_parallel probe of a memoized frame reuses its Dataset's analyzed
+# plan and, when it gets that far, its cached RDD instead of planning the
+# subtree cold (~0.1-0.5 s per probe).
 _ENTRY_DF_MEMO: dict = {}
 
 
@@ -121,57 +122,27 @@ def _tbl(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Raw memoized documents scan. r10 floored this shared entry frame
-    unconditionally; the r11 interleaved A/B (floor on/off, alternating
-    fresh-session suites at sf0.1 AND sf1 — OPTIMIZATION_r11.md §1) showed
-    the floor's full-text shuffle LOSES at both SFs for every plain-scan
-    consumer (text_stats 1.5-2.0×, repetition_stats, lm_score, cross_dup,
-    leak_split...) and is redundant for the pipelines that carry their own
-    internal guard (dedup/winnow `_spread_single_split` — the entry floor
-    made those pay a double full-corpus repartition). Consumers whose
-    pre-exchange per-doc CPU measurably dominates the shuffle floor at
-    THEIR call site via ``_docs_floored``: q_simhash, q_ngram_jaccard,
-    q_domain_cap (sf1 wins 1.6×/2.1×/3.2×)."""
+    """Raw memoized documents scan, not floored. The r11 interleaved A/B
+    (floor on/off, fresh-session suites at sf0.1 and sf1 —
+    OPTIMIZATION_r11.md §1) showed a floor's full-text shuffle LOSES at
+    both SFs for every plain-scan consumer (text_stats 1.5-2.0×,
+    repetition_stats, lm_score, cross_dup, leak_split...). The dedup and
+    winnow pipelines floor inside (``session.scan_parallel``); the
+    consumers whose per-doc CPU below the first exchange measurably
+    dominates the floor's shuffle call ``scan_parallel(_docs(...),
+    key="doc_id")`` themselves: q_simhash, q_ngram_jaccard, q_domain_cap
+    (sf1 wins 1.6×/2.1×/3.2×)."""
     return _tbl(spark, sf_dir, "documents")
 
 
-def _docs_floored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # single-row-group files scan as ONE task; per-doc CPU (tokenization,
-    # hashing, HOF array work) would otherwise serialize onto one core
-    # before the first exchange. No-op for well-partitioned sources.
-    from periodicity_spark.session import scan_parallel
-
-    return _entry_df(
-        spark,
-        sf_dir,
-        "docs",
-        lambda: scan_parallel(
-            _tbl(spark, sf_dir, "documents"), key="doc_id"
-        ),
-    )
-
-
 def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Raw memoized embeddings scan — same per-consumer floor policy as
+    """Raw memoized embeddings scan, not floored — same policy as
     ``_docs`` (r11 A/B: the floor loses 1.3-2.0× at sf0.1 and ties at sf1
     for every embeddings consumer except the brute-force matmul of
     q_simsearch_topk and the LSH signature UDF of q_simsearch_lsh
-    — sf1 raw 22.7 s vs floored 10.4 s — which floor at their call
-    sites)."""
+    — sf1 raw 22.7 s vs floored 10.4 s — which call
+    ``scan_parallel(_emb(...), key="vec_id")``)."""
     return _tbl(spark, sf_dir, "embeddings")
-
-
-def _emb_floored(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from periodicity_spark.session import scan_parallel
-
-    return _entry_df(
-        spark,
-        sf_dir,
-        "emb",
-        lambda: scan_parallel(
-            _tbl(spark, sf_dir, "embeddings"), key="vec_id"
-        ),
-    )
 
 
 def _money_sum(expr, nd: int = 2):
@@ -3169,7 +3140,9 @@ def q_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # floored: the inline quality expression (tokenize + ratio arithmetic
     # per doc) runs below topk_per_key's local pass, single-task on a
     # few-split scan (sf1 interleaved A/B: floored 2.64 s vs raw 8.40 s)
-    out = sample_ops.domain_cap(_docs_floored(spark, sf_dir), n=10)
+    out = sample_ops.domain_cap(
+        scan_parallel(_docs(spark, sf_dir), key="doc_id"), n=10
+    )
     return out.select(
         "source", "doc_id", F.round("quality", 6).alias("quality"), "rank"
     )
@@ -3280,7 +3253,7 @@ def q_simsearch_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # compute below the rank window's exchange (r11 A/B: the floor wins
     # at sf0.1 — 0.89 vs 0.96 s — and ties at sf1); dim=64 routes the
     # dot/norm arithmetic through the unrolled codegen expressions
-    emb = _emb_floored(spark, sf_dir)
+    emb = scan_parallel(_emb(spark, sf_dir), key="vec_id")
     probes = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
@@ -3317,7 +3290,7 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Floored input: the per-token md5 + 60-vote partial aggregation runs
     # BELOW the per-doc exchange, so a few-split scan serializes it
     # (sf1 interleaved A/B: floored 2.59 s vs raw 4.01 s; sf0.1 cost 0.09 s)
-    d = _docs_floored(spark, sf_dir)
+    d = scan_parallel(_docs(spark, sf_dir), key="doc_id")
     toks = d.select("doc_id", F.explode(F.split("text", " ")).alias("tok")).filter(
         F.length("tok") > 0
     )
@@ -3527,7 +3500,10 @@ def q_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # gram exchange is this query's dominant CPU on a few-split scan
     # (sf1 interleaved A/B: floored 11.3 s vs raw 24.2 s; sf0.1 tie)
     return dedup.ngram_jaccard_pairs(
-        _docs_floored(spark, sf_dir), n=3, threshold=0.5, max_df=50
+        scan_parallel(_docs(spark, sf_dir), key="doc_id"),
+        n=3,
+        threshold=0.5,
+        max_df=50,
     )
 
 
@@ -3828,7 +3804,7 @@ def q_simsearch_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # every corpus vector) runs BELOW the first exchange and serializes
     # on a narrow scan — the one gated-floor consumer the sf1 A/B flagged
     # as a regression (22.7 s raw vs 10.4 s floored; sf0.1 pays ~0.4 s)
-    emb = _emb_floored(spark, sf_dir)
+    emb = scan_parallel(_emb(spark, sf_dir), key="vec_id")
     probes = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
@@ -4708,12 +4684,9 @@ def q_tf_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (value²/frequency on a fixed 5-frequency grid) so the whole query has
     # an exact DuckDB oracle; the CWT-backed input path is exercised by
     # wps_gwps (rows-only — Python FFT kernel)
-    from periodicity_spark.session import scan_parallel
-
     # floor the SOURCE, not the ×5-expanded spectrogram: the floor exchange
-    # moves one-fifth the bytes, the memoized _ts probes from its cached
-    # RDD (no cold re-plan of the crossJoin subtree), and downsample_tf is
-    # told to skip its own probe (assume_parallel)
+    # moves one-fifth the bytes, and downsample_tf's own scan_parallel
+    # then finds the repartition in the plan and adds no second floor
     ts = scan_parallel(_ts(spark, sf_dir))
     freqs = spark.createDataFrame(
         [(0.5,), (1.0,), (2.0,), (4.0,), (8.0,)], "frequency double"
@@ -4729,7 +4702,7 @@ def q_tf_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         .alias("power"),
     )
-    out = ops_resample.downsample_tf(tf, dt=2.0, df_=0.5, assume_parallel=True)
+    out = ops_resample.downsample_tf(tf, dt=2.0, df_=0.5)
     return out.select(
         "series_id", "time", "frequency", F.round("power", 6).alias("power")
     )

@@ -331,25 +331,20 @@ def interp(ts: DataFrame, grid: DataFrame, method: str = "linear", **kwargs) -> 
     return m[method](ts, grid)
 
 
-def downsample_tf(
-    tf: DataFrame, dt: float, df_: float, assume_parallel: bool = False
-) -> DataFrame:
+def downsample_tf(tf: DataFrame, dt: float, df_: float) -> DataFrame:
     """2-D rebinning of a TF spectrogram (reference TFSeries.downsample,
     core.py:1129-1163): groupBy on two bucket columns — one shuffle.
     Bucket semantics follow the 1-D downsample (equal-width, right-closed).
 
-    ``assume_parallel=True`` skips the parallelism-floor probe: pass it
-    when the caller has already floored the input's partitioning (e.g.
-    ``scan_parallel`` on the source BEFORE a narrow expansion — fewer
-    bytes through the floor exchange, and no cold re-plan of the expanded
-    subtree just to read its partition count)."""
+    A caller may floor the SOURCE before a narrow expansion into ``tf``
+    (fewer bytes through the floor exchange); the floor here then sees
+    that repartition in the plan and adds none."""
     from periodicity_spark.session import scan_parallel
 
     # both aggregation passes consume tf inside its scan tasks; floor the
     # parallelism so a single-row-group source (or a narrow upstream
     # expansion over one) does not serialize them onto one core
-    if not assume_parallel:
-        tf = scan_parallel(tf)
+    tf = scan_parallel(tf)
     stats = tf.groupBy("series_id").agg(
         F.min("time").alias("_t0"), F.max("time").alias("_t1"),
         F.min("frequency").alias("_f0"), F.max("frequency").alias("_f1"),

@@ -82,50 +82,60 @@ def find_dips(ts: DataFrame, value: str = "value", include_edges: bool = False) 
     return find_peaks(neg, value, include_edges).withColumn(value, -F.col(value))
 
 
+def peak_prominences(x):
+    """Strict interior local maxima of the float array ``x`` and their
+    scipy-style prominences: walk out from each peak to the nearest higher
+    sample (or the edge) on either side; the prominence is the peak's
+    height above the higher of the two valley minima. → (peak indices,
+    prominences). Sequential per series, so it runs inside Arrow kernels:
+    ``find_peaks_prominence`` and ``psort_by_prominence`` import it in their
+    closures (``grouped_apply`` ships the package to the workers)."""
+    import numpy as np
+
+    n = len(x)
+    mid = x[1:-1]
+    peaks = np.where((mid > x[:-2]) & (mid > x[2:]))[0] + 1
+    proms = np.empty(len(peaks))
+    for j, p in enumerate(peaks):
+        # left: min between p and previous higher sample (or edge)
+        i = p - 1
+        left_min = x[p]
+        while i >= 0 and x[i] <= x[p]:
+            left_min = min(left_min, x[i])
+            i -= 1
+        i = p + 1
+        right_min = x[p]
+        while i < n and x[i] <= x[p]:
+            right_min = min(right_min, x[i])
+            i += 1
+        proms[j] = x[p] - max(left_min, right_min)
+    return peaks, proms
+
+
 def find_peaks_prominence(ts: DataFrame, order_col: str = "time", value: str = "value") -> DataFrame:
     """Peaks with exact scipy-style prominences (reference attaches
-    ``prominences`` attrs, core.py:283-317). The prominence scan (walk out to
-    the nearest higher point on each side, take max of the min-valleys) is
-    sequential → Arrow-batched kernel per series, grouped in coarse hash
-    buckets (session.grouped_apply) so the ~1 ms per-group Arrow transfer
-    cost is paid per bucket, not per series — with millions of small series
-    (the 100 TB shape, and 7k series already at sf0.1) the per-series
-    grouping overhead dominated the kernel itself. Output one row per
-    peak: (series_id, <order_col>, <value>, prominence).
+    ``prominences`` attrs, core.py:283-317). The prominence scan
+    (``peak_prominences``) is sequential → Arrow-batched kernel per series,
+    grouped in coarse hash buckets (session.grouped_apply) so the ~1 ms
+    per-group Arrow transfer cost is paid per bucket, not per series — with
+    millions of small series (the 100 TB shape, and 7k series already at
+    sf0.1) the per-series grouping overhead dominated the kernel itself.
+    Output one row per peak: (series_id, <order_col>, <value>, prominence).
     """
     from periodicity_spark.session import grouped_apply
 
     out_schema = f"series_id string, {order_col} double, {value} double, prominence double"
 
-    # NOTE: the closure imports pandas/numpy inside and references no module
-    # globals — cloudpickle then ships it by value, so executors never need
-    # periodicity_spark importable (driver may run from any cwd/PYTHONPATH).
     def _per_series(pdf):
-        import numpy as np
         import pandas as pd
+        from periodicity_spark.operators.windows import peak_prominences
 
         pdf = pdf.sort_values(order_col)
         x = pdf[value].to_numpy(dtype=float)
         t = pdf[order_col].to_numpy(dtype=float)
-        n = len(x)
-        if n < 3:
+        if len(x) < 3:
             return pd.DataFrame(columns=["series_id", order_col, value, "prominence"])
-        mid = x[1:-1]
-        peaks = np.where((mid > x[:-2]) & (mid > x[2:]))[0] + 1
-        proms = np.empty(len(peaks))
-        for j, p in enumerate(peaks):
-            # left: min between p and previous higher sample (or edge)
-            i = p - 1
-            left_min = x[p]
-            while i >= 0 and x[i] <= x[p]:
-                left_min = min(left_min, x[i])
-                i -= 1
-            i = p + 1
-            right_min = x[p]
-            while i < n and x[i] <= x[p]:
-                right_min = min(right_min, x[i])
-                i += 1
-            proms[j] = x[p] - max(left_min, right_min)
+        peaks, proms = peak_prominences(x)
         return pd.DataFrame(
             {
                 "series_id": pdf["series_id"].iloc[0],

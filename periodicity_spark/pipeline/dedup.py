@@ -18,74 +18,12 @@ the per-band min is a lexicographic string min.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
 def _md5(col: Column) -> Column:
     return F.md5(col.cast("binary"))
-
-
-def _spread_single_split(df: DataFrame, key: str | None = None) -> DataFrame:
-    """Small-input guard: a corpus read from FEWER FILES than the cluster
-    has cores would run the whole downstream scan-side transform (md5
-    shingling, signature matmuls) on a handful of cores — measured 8.6 s
-    single-threaded at sf0.1. At real scale the source has many splits and
-    this is a no-op. The probe is ``inputFiles()`` — plan metadata, no job
-    and no RDD plan conversion (``df.rdd.getNumPartitions()`` forces one on
-    every call, a fixed cost on wide plans). Non-file inputs (in-memory
-    test frames, derived locals) return no files and are left alone: Spark
-    already spreads local relations over defaultParallelism.
-
-    Few-but-LARGE splittable files are also left alone: Spark splits a
-    parquet scan at ``spark.sql.files.maxPartitionBytes`` (128 MB default),
-    so one 10 GB file already yields ~80 scan partitions and a
-    ``repartition(defaultParallelism)`` here would REDUCE parallelism and
-    add a full-corpus shuffle. The size gate stats local ``file:`` URIs
-    directly; on a non-local filesystem (no cheap stat) the estimate falls
-    back to "small" — matching the historical behavior, and at real scale
-    non-local sources arrive in many splits so the n_files gate already
-    passes them through."""
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return df
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    if not (0 < len(files) < par):
-        return df
-    try:
-        max_part = int(spark.conf.get("spark.sql.files.maxPartitionBytes", None)
-                       or 128 * 1024 * 1024)
-    except Exception:
-        max_part = 128 * 1024 * 1024
-    total = 0
-    for uri in files:
-        if uri.startswith("file:"):
-            path = uri[len("file:"):]
-            while path.startswith("//"):
-                path = path[1:]
-            try:
-                total += os.path.getsize(path)
-            except OSError:
-                pass
-    # the scan itself would already produce >= par splits: leave it alone
-    if total >= par * max_part:
-        return df
-    if key is not None and key in df.columns:
-        # hash-by-key: a keyless repartition(n) first pays a LOCAL SORT of
-        # its input (spark.sql.execution.sortBeforeRepartition, on by
-        # default since SPARK-23207 so retried tasks reproduce the same
-        # row→partition map) — on the one-task scan this guard exists for,
-        # that is a single-core sort of the whole corpus before anything
-        # moves (measured: winnow_fp 6.6 → 6.1 s at sf1 from this alone).
-        # Hash partitioning needs no sort, is deterministic under retry by
-        # construction (guide §2.5), and downstream per-key operators can
-        # reuse the layout.
-        return df.repartition(par, key)
-    return df.repartition(par)
 
 
 def _shingle_census_bound(docs: DataFrame, text_col: str, k: int) -> int:
@@ -530,13 +468,16 @@ def minhash_near_duplicates(
     # aggregate (no md5, no arrays, no persist write), so the packed cache
     # materializes INLINE in the main job instead of in a census job of
     # its own; its ~1.4× slack can only add a chunk. It reads the input as
-    # given: after the spread below it would also pay a text shuffle.
+    # given: after the floor below it would also pay a text shuffle.
+    from periodicity_spark.session import scan_parallel
+
     n_sh = (
         _shingle_census_bound(docs, text_col, k)
         if broadcast_arrays is None
         else None
     )
-    docs = _spread_single_split(docs, key=id_col)
+    # shingling and md5 hashing run inside the scan tasks
+    docs = scan_parallel(docs, key=id_col)
     # the shingle set feeds signatures AND both sides of the verify join —
     # persist the PACKED per-doc representation (one array row per doc)
     # and derive everything from it in-row: signatures via array mins,

@@ -17,7 +17,7 @@ import math
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from periodicity_spark.pipeline.dedup import _spread_single_split
+from periodicity_spark.session import scan_parallel
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -853,7 +853,7 @@ def cosine_near_duplicates(
     # the left side sets the cartesian's task count — a single-split source
     # would serialize the whole n² scan into one task (measured 14 s for 4M
     # pairs at sf0.1); at real scale the source has many splits already
-    left = _spread_single_split(vecs, key=id_col)
+    left = scan_parallel(vecs, key=id_col)
     a = left.select(
         F.col(id_col).alias("d1"),
         F.col(vec_col).alias("_v1"),

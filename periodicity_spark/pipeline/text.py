@@ -186,17 +186,15 @@ def winnow_fingerprints(
     equal to the per-step-mod recurrence). Scales as a map over document
     batches — the 100 TB cost profile of a scan.
 
-    Small-split guard: a corpus that arrives in fewer parquet splits than
-    the cluster has cores (one 60 MB file at soak scale) would run the
-    whole kernel on a handful of tasks — the same hazard
-    ``minhash_near_duplicates`` guards, so the same
-    ``_spread_single_split`` is applied (no-op whenever the scan already
-    fans out)."""
+    A corpus that scans on fewer tasks than the cluster has cores (one
+    60 MB file at soak scale) would run the whole kernel on a handful of
+    tasks, so the input goes through ``session.scan_parallel`` first
+    (no-op whenever the scan already fans out)."""
     import re
 
-    from periodicity_spark.pipeline.dedup import _spread_single_split
+    from periodicity_spark.session import scan_parallel
 
-    docs = _spread_single_split(docs, key=id_col)
+    docs = scan_parallel(docs, key=id_col)
 
     B, M, kk, ww = WINNOW_BASE, WINNOW_MOD, k, window
     idc, txc = id_col, text_col

@@ -140,78 +140,65 @@ def persisted_lazy(spark, key: str, builder):
 
 
 def scan_parallel(df, key: str = "series_id"):
-    """Floor the parallelism of an input that feeds a big PRE-SHUFFLE
-    expansion (grid crossJoin, lag explode): when the source scan yields
-    fewer partitions than the cluster's defaultParallelism — e.g. a small
-    parquet file with one row group, whose single-task scan serializes the
-    whole expansion+partial-aggregate segment onto one core — hash-
-    repartition by ``key`` up to defaultParallelism first.
+    """The one scan-parallelism floor: when ``df`` would be scanned by
+    fewer tasks than the cluster's defaultParallelism, hash-repartition it
+    by ``key`` to defaultParallelism; otherwise return ``df`` unchanged.
 
-    Scale-adaptive, not tuned to local[32]: on a real cluster a 100 TB scan
-    already has thousands of partitions and this is a no-op (the partition
-    count is read from plan metadata; no job runs). Hash-by-key (not round
-    robin) so downstream per-key aggregations/windows can reuse the
-    partitioning, and the mapping is deterministic under task retry
-    (guide §2.5: rand-derived keys can duplicate rows on fetch failure).
+    Callers apply it to an input that feeds CPU-dense work running inside
+    the scan tasks, before the first exchange (grid crossJoin, lag explode,
+    shingling and hashing, vector matmuls): a small parquet file with one
+    row group scans as one task and would serialize that work onto one
+    core. At real scale a scan already has thousands of splits and this is
+    a no-op. Hash-by-key, not round robin: no local sort before the
+    exchange (a keyless ``repartition(n)`` sorts its input so retries
+    reproduce the row→partition map), deterministic under task retry
+    (guide §2.5), and per-key operators downstream can reuse the layout.
+
+    One probe, cheapest checks first:
+
+    1. A streaming frame cannot be probed; it is always repartitioned
+       (its micro-batches read from one file are one task each).
+    2. A frame whose analyzed plan already repartitions is at the
+       parallelism its builder chose; it is returned as is (a string probe
+       of the analyzed plan; no planning).
+    3. Fewer local files than cores: the TRUE parallelism is the row-group
+       count read from the parquet footers. One row group is read by
+       exactly one task (the split holding its midpoint), but the scan
+       splits by byte range: a large one-group file (or a small one under
+       a small ``maxPartitionBytes``) probes as many partitions of which
+       all but one are empty (measured 5× on a 132 MB one-group file whose
+       "32-way" scan ran single-task). Fewer row groups than cores floors.
+    4. Anything else floors when its RDD has fewer partitions than cores.
+       Only inputs step 3 did not floor pay for this plan conversion.
     """
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.isStreaming:
+        return df.repartition(target, key)
+    try:
+        if "Repartition" in df._jdf.queryExecution().analyzed().toString():
+            return df
+        files = df.inputFiles()
+    except Exception:
+        return df
+    if 0 < len(files) < target and all(u.startswith("file:") for u in files):
+        from urllib.parse import unquote, urlparse
+
+        import pyarrow.parquet as pq
+
+        try:
+            row_groups = sum(
+                pq.ParquetFile(unquote(urlparse(u).path)).metadata.num_row_groups
+                for u in files
+            )
+        except Exception:  # not parquet or unreadable: step 4 decides
+            row_groups = target
+        if row_groups < target:
+            return df.repartition(target, key)
     try:
         current = df.rdd.getNumPartitions()
     except Exception:
         return df
-    if current < target:
-        return df.repartition(target, key)
-    # current >= target can still be a lie: parquet scans split by BYTE
-    # RANGE, but one ROW GROUP is readable by exactly one task (the split
-    # holding its midpoint), so a large single-row-group file probes as
-    # many partitions of which all but one are EMPTY — measured 5× on a
-    # 132 MB one-group file whose "32-way" scan ran single-task. When the
-    # source is fewer local files than cores, read their footers (cheap,
-    # bounded by target) and floor on the TRUE row-group count. Non-local
-    # or many-file sources return early — at real scale row groups ≫
-    # cores and the probe never pays.
-    try:
-        files = df.inputFiles()
-    except Exception:
-        return df
-    if not (0 < len(files) < target):
-        return df
-    # a caller that already repartitioned is at its requested parallelism;
-    # repartitioning again here would undo that caller's layout (string
-    # probe of the analyzed plan — only paid in this rare few-files branch)
-    try:
-        if "Repartition" in df._jdf.queryExecution().analyzed().toString():
-            return df
-    except Exception:
-        return df
-    row_groups = 0
-    for uri in files:
-        if not uri.startswith("file:"):
-            return df
-        path = uri[len("file:"):]
-        while path.startswith("//"):
-            path = path[1:]
-        try:
-            import pyarrow.parquet as pq
-
-            row_groups += pq.ParquetFile(path).metadata.num_row_groups
-        except Exception:
-            return df
-        if row_groups >= target:
-            return df
-    return df.repartition(target, key)
-
-
-def stream_floor_enabled() -> bool:
-    """Config gate for the streaming operators' unconditional stateless
-    repartition (streaming frames cannot probe partition counts, so the
-    batch-side ``scan_parallel`` probe is unavailable and the floor is
-    applied blindly). Default ON — the driver micro-batches read from
-    single files. Set ``SPARK_GRAFT_STREAM_FLOOR=0`` on a genuinely wide
-    streaming source, where the extra exchange of raw rows is pure
-    overhead."""
-    return os.environ.get("SPARK_GRAFT_STREAM_FLOOR", "1") != "0"
+    return df.repartition(target, key) if current < target else df
 
 
 def grouped_apply(

@@ -139,10 +139,10 @@ def gls_periodogram(
     # periodogram onto one core (guide §2.5 input skew). Floor the
     # parallelism first; no-op when the scan already has enough partitions.
     # Probe the CALLER'S frame before deriving anything from it: a repeat
-    # caller's Dataset has a cached RDD, so the probe is a dict lookup
-    # instead of a cold re-plan of the subtree (~0.1-0.3 s per build), and
-    # the filters below push through the repartition, so the executed plan
-    # is unchanged.
+    # caller's Dataset keeps its analyzed plan and, if the probe reaches
+    # the partition count, its RDD, so no part of the subtree is planned
+    # cold again (~0.1-0.3 s per build); the filters below push through
+    # the repartition, so the executed plan is unchanged.
     from periodicity_spark.session import scan_parallel
 
     ts = scan_parallel(ts)

@@ -131,39 +131,23 @@ def psort_by_prominence(pg: DataFrame, k: int | None = None) -> DataFrame:
         " prominence double"
     )
 
-    # NOTE: the closure imports pandas/numpy inside and references no module
-    # globals — cloudpickle then ships it by value, so executors never need
-    # periodicity_spark importable. The peak/prominence walk is verbatim
-    # find_peaks_prominence's (bit-identity pinned by differential test).
+    # the peak/prominence walk is find_peaks_prominence's own
+    # (operators.windows.peak_prominences; bit-identity pinned by
+    # differential test)
     def _per_series(pdf):
         import numpy as np
         import pandas as pd
+        from periodicity_spark.operators.windows import peak_prominences
 
         cols = ["series_id", "rank", "frequency", "power", "prominence"]
         pdf = pdf.sort_values("frequency")
         x = pdf["power"].to_numpy(dtype=float)
         f = pdf["frequency"].to_numpy(dtype=float)
-        n = len(x)
-        if n < 3:
+        if len(x) < 3:
             return pd.DataFrame(columns=cols)
-        mid = x[1:-1]
-        peaks = np.where((mid > x[:-2]) & (mid > x[2:]))[0] + 1
+        peaks, proms = peak_prominences(x)
         if not len(peaks):
             return pd.DataFrame(columns=cols)
-        proms = np.empty(len(peaks))
-        for j, p in enumerate(peaks):
-            # left: min between p and previous higher sample (or edge)
-            i = p - 1
-            left_min = x[p]
-            while i >= 0 and x[i] <= x[p]:
-                left_min = min(left_min, x[i])
-                i -= 1
-            i = p + 1
-            right_min = x[p]
-            while i < n and x[i] <= x[p]:
-                right_min = min(right_min, x[i])
-                i += 1
-            proms[j] = x[p] - max(left_min, right_min)
         # row_number over (prominence DESC, frequency ASC): negated
         # prominence ascending = prominence descending on the identical
         # float64s; a NaN prominence maps to -inf so it ranks FIRST, matching

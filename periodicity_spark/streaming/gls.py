@@ -52,16 +52,12 @@ def stream_gls_sums(events: DataFrame, freq_grid: DataFrame) -> DataFrame:
     # Stateless repartition before the N×F expansion: a micro-batch read
     # from a single file is one task, which would serialize the grid
     # crossJoin + 2·N·F transcendentals + partial aggregation onto one
-    # core (same input-skew floor as the batch operator's scan_parallel;
-    # streaming frames cannot probe partition counts, so the floor is
-    # unconditional — on a wide-source cluster the extra exchange moves
-    # raw events once, far cheaper than the expansion it parallelizes;
-    # SPARK_GRAFT_STREAM_FLOOR=0 is the wide-source escape hatch).
-    from periodicity_spark.session import stream_floor_enabled
+    # core. scan_parallel cannot probe a streaming frame, so it always
+    # floors one; on a wide source the extra exchange moves raw events
+    # once, far cheaper than the expansion it parallelizes.
+    from periodicity_spark.session import scan_parallel
 
-    if stream_floor_enabled():
-        par = events.sparkSession.sparkContext.defaultParallelism
-        base = base.repartition(par, "series_id")
+    base = scan_parallel(base)
     joined = base.crossJoin(F.broadcast(freq_grid))
     theta = F.lit(TWO_PI) * F.col("frequency") * F.col("time")
     proj = joined.select(

@@ -478,13 +478,11 @@ def stream_neardup(
     # micro-batch read from one file is a single task, which would run
     # all shingling + md5 minhashing on one core before the _slot
     # exchange; moving the raw docs first is far cheaper than the
-    # signature work it parallelizes (same floor as streaming GLS;
-    # SPARK_GRAFT_STREAM_FLOOR=0 is the wide-source escape hatch)
-    from periodicity_spark.session import stream_floor_enabled
+    # signature work it parallelizes (scan_parallel always floors a
+    # streaming frame, as in streaming GLS)
+    from periodicity_spark.session import scan_parallel
 
-    if stream_floor_enabled():
-        par = docs.sparkSession.sparkContext.defaultParallelism
-        docs = docs.repartition(par, "doc_id")
+    docs = scan_parallel(docs, key="doc_id")
     sig = minhash_signatures_per_row(docs, k=k, n_hashes=n_hashes, r=r)
     cap = int(max_bucket)
     # id type comes from the INPUT schema (as stream_topk does) — the

@@ -2,12 +2,14 @@
 
 - entry DataFrames (_ts/_docs/_emb) are memoized per (session, sf_dir) —
   the SAME immutable plan object is returned, so ~45 bench queries skip
-  rebuilding the identical unresolved subtree over py4j and
-  scan_parallel's partition probe reuses the Dataset's cached RDD;
+  rebuilding the identical unresolved subtree over py4j, and a
+  scan_parallel probe of a memoized frame reuses its Dataset's analyzed
+  plan and cached RDD;
 - _gls_pg routes through persisted_lazy, so the five sibling queries
   sharing the periodogram memo skip the ~0.6 s plan rebuild on a hit;
-- downsample_tf(assume_parallel=True) lets a caller that already floored
-  the SOURCE partitioning (before a narrow expansion) skip the probe.
+- a caller that floors the SOURCE before a narrow expansion (tf_downsample)
+  gets no second floor from downsample_tf: scan_parallel sees the
+  repartition already in the plan.
 
 These are plan-construction changes only; every test here pins that the
 RESULTS are unchanged by the memo/probe path taken.
@@ -46,7 +48,7 @@ def test_gls_pg_memo_hit_skips_rebuild(spark, sf_dir):
     assert len(_s._PERSIST_MEMO) == n_entries
 
 
-def test_downsample_tf_assume_parallel_rows_identical(spark, sf_dir):
+def test_downsample_tf_floored_source_rows_identical(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from periodicity_spark.operators import resample as ops_resample
@@ -67,10 +69,18 @@ def test_downsample_tf_assume_parallel_rows_identical(spark, sf_dir):
             .alias("power"),
         )
 
+    def floors(df):
+        plan = df._jdf.queryExecution().analyzed().toString()
+        return plan.count("RepartitionByExpression")
+
+    source = scan_parallel(ts)
+    assert source is not ts, "the one-row-group events file must floor"
     guarded = ops_resample.downsample_tf(tf_from(ts), dt=2.0, df_=0.5)
-    floored = ops_resample.downsample_tf(
-        tf_from(scan_parallel(ts)), dt=2.0, df_=0.5, assume_parallel=True
-    )
+    floored = ops_resample.downsample_tf(tf_from(source), dt=2.0, df_=0.5)
+    # tf is read twice (the per-series stats and the join back onto
+    # them), each read through exactly one floor: the floored source gets
+    # no second floor exchange from downsample_tf
+    assert floors(guarded) == floors(floored) == 2
     a = sorted(map(tuple, guarded.collect()))
     b = sorted(map(tuple, floored.collect()))
     assert a == b

@@ -1065,38 +1065,69 @@ def test_ann_mllib_lsh_warns_about_regime(emb, spark):
         simsearch.ann_mllib_lsh(emb, _probes(emb), k=5, dim=64)
 
 
-def test_spread_single_split_size_gate(spark, tmp_path):
-    """_spread_single_split must repartition a SMALL single-file input (the
-    measured 8.6 s single-core shingle regression) but leave a single file
-    alone when the scan would already split it into >= defaultParallelism
-    partitions — few-but-LARGE splittable files had their parallelism
-    REDUCED by the round-8 files-count-only probe (ADVICE r8)."""
-    from periodicity_spark.pipeline.dedup import _spread_single_split
+def test_scan_parallel_floor_rule(spark, tmp_path):
+    """session.scan_parallel is the one scan-parallelism floor: it
+    repartitions by key to defaultParallelism exactly when the input
+    would be scanned by fewer tasks than cores, whether the count comes
+    from the parquet footers (few local files), the RDD partitions, or a
+    streaming frame that cannot be probed."""
+    import os
 
-    p = str(tmp_path / "one_file")
-    spark.range(2000).coalesce(1).write.mode("overwrite").parquet(p)
-    df = spark.read.parquet(p)
-    assert len(df.inputFiles()) == 1
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from periodicity_spark.session import scan_parallel
+
     par = spark.sparkContext.defaultParallelism
 
-    # small single file: spread to full parallelism
-    spread = _spread_single_split(df)
-    assert spread is not df
-    assert spread.rdd.getNumPartitions() == par
+    def floored_by(df, key):
+        plan = df._jdf.queryExecution().analyzed().toString()
+        return f"RepartitionByExpression [{key}" in plan
 
-    # same file under a tiny maxPartitionBytes: the scan itself already
-    # yields >= par splits, so the gate must be an identity (no shuffle)
+    def write(path, rows, row_group_size):
+        ids = pa.array(range(rows), pa.int64())
+        pq.write_table(pa.table({"doc_id": ids}), path, row_group_size=row_group_size)
+        return path
+
+    small = write(str(tmp_path / "small.parquet"), 2000, 2000)
+    wide = write(str(tmp_path / "wide.parquet"), 100 * par, 100)
+    assert pq.ParquetFile(wide).metadata.num_row_groups == par
+
+    # a small one-file input floors
+    df = spark.read.parquet(small)
+    out = scan_parallel(df, key="doc_id")
+    assert out is not df and floored_by(out, "doc_id")
+    assert out.rdd.getNumPartitions() == par
+
+    def read_split(path):
+        # byte splits of ~1/(2·par) of the file: >= par scan partitions
+        size = os.path.getsize(path) // (2 * par)
+        spark.conf.set("spark.sql.files.maxPartitionBytes", str(size))
+        df = spark.read.parquet(path)
+        assert df.rdd.getNumPartitions() >= par
+        return df
+
     old = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "16")
     try:
-        df2 = spark.read.parquet(p)
-        assert _spread_single_split(df2) is df2
+        # the one row group is read by the one split holding its midpoint:
+        # many scan partitions, exactly one with rows — it floors
+        df = read_split(small)
+        assert df.select(F.spark_partition_id()).distinct().count() == 1
+        assert floored_by(scan_parallel(df, key="doc_id"), "doc_id")
+        # par row groups in as many splits already scan wide: as is
+        df = read_split(wide)
+        assert scan_parallel(df, key="doc_id") is df
     finally:
         spark.conf.set("spark.sql.files.maxPartitionBytes", old)
 
-    # non-file input (local relation): identity
-    local = spark.range(10).toDF("doc_id")
-    assert _spread_single_split(local) is local
+    # an already-repartitioned frame keeps its builder's layout
+    df = spark.read.parquet(small).repartition(2, "doc_id")
+    assert scan_parallel(df, key="doc_id") is df
+
+    # a streaming frame cannot be probed: always repartitioned by its key
+    stream = spark.readStream.schema("doc_id long").parquet(str(tmp_path))
+    assert stream.isStreaming
+    assert floored_by(scan_parallel(stream, key="doc_id"), "doc_id")
 
 
 def test_ann_topk_auto_forwards_lsh_kwargs(emb, spark):

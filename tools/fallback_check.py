@@ -24,7 +24,8 @@ import subprocess
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 
 def main() -> int:
@@ -43,7 +44,7 @@ def main() -> int:
         "shuffle_partitions": spark.conf.get("spark.sql.shuffle.partitions"),
         "git_head": subprocess.run(
             ["git", "rev-parse", "--short", "HEAD"],
-            capture_output=True, text=True, cwd="/root/repo",
+            capture_output=True, text=True, cwd=ROOT,
         ).stdout.strip(),
     }
 

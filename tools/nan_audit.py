@@ -14,10 +14,11 @@ Usage: python tools/nan_audit.py [sf_dir] [threshold=0.5] [query ...]
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as entrymod
 from periodicity_spark import get_spark

@@ -30,7 +30,7 @@ import os
 import subprocess
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF5 = "/root/repo/.scale/sf5"
 SLICE = "/root/repo/.scale/sf5_docslice"
