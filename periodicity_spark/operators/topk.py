@@ -32,6 +32,8 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from periodicity_spark.session import ensure_worker_imports, prune_zip_importers
+
 
 def topk_per_key(
     df: DataFrame,
@@ -52,6 +54,7 @@ def topk_per_key(
     asc = not descending
 
     def local_topk(batches):
+        prune_zip_importers()
         import pandas as pd
 
         acc = None
@@ -71,6 +74,7 @@ def topk_per_key(
         if acc is not None and len(acc):
             yield acc
 
+    ensure_worker_imports(df.sparkSession)
     candidates = df.mapInPandas(local_topk, out_schema)
     order = [
         F.col(order_col).desc() if descending else F.col(order_col).asc()

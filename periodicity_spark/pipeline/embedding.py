@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from periodicity_spark.session import ensure_worker_imports, prune_zip_importers
+
 
 def _moment_partials(emb: DataFrame, vec_col: str) -> DataFrame:
     """→ (d, idx, val): flattened per-batch partial moments, KEYED by the
@@ -46,6 +48,7 @@ def _moment_partials(emb: DataFrame, vec_col: str) -> DataFrame:
     import pandas as pd
 
     def gen(batches):
+        prune_zip_importers()
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -73,6 +76,7 @@ def _moment_partials(emb: DataFrame, vec_col: str) -> DataFrame:
                     }
                 )
 
+    ensure_worker_imports(emb.sparkSession)
     return emb.select(vec_col).mapInPandas(gen, "d long, idx long, val double")
 
 
@@ -152,6 +156,7 @@ def pca_project(
     d_in = mu.size
 
     def gen(batches):
+        prune_zip_importers()
         for pdf in batches:
             if not len(pdf):
                 continue
@@ -171,6 +176,7 @@ def pca_project(
             P = (X - mu) @ W.T
             yield pd.DataFrame({id_col: ids, out_col: list(P)})
 
+    ensure_worker_imports(emb.sparkSession)
     return emb.select(id_col, vec_col).mapInPandas(
         gen, f"{id_col} long, {out_col} array<double>"
     )

@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from periodicity_spark.session import ensure_worker_imports, prune_zip_importers
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -260,12 +262,11 @@ def extract_features(media: DataFrame, n_features: int = N_FEATURES) -> DataFram
     → (media_id, kind, features array<double>). Partition-friendly: each
     batch decodes independently; no state, no driver round-trips; malformed
     payloads (and unknown kinds) yield NULL features."""
-    from periodicity_spark.session import ensure_worker_imports
-
     ensure_worker_imports(media.sparkSession)
     nf = n_features
 
     def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prune_zip_importers()
         import pandas as pd
         from periodicity_spark.pipeline.multimodal import DECODERS as reg
 
@@ -323,12 +324,11 @@ def resize_images(media: DataFrame, out_w: int = 8, out_h: int = 8) -> DataFrame
     — exploded so downstream SQL/dedup can consume it without array
     columns. Arrow-batched mapInPandas, stateless per batch; non-image /
     malformed payloads are skipped. At scale this is a pure map stage."""
-    from periodicity_spark.session import ensure_worker_imports
-
     ensure_worker_imports(media.sparkSession)
     ow, oh = int(out_w), int(out_h)
 
     def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prune_zip_importers()
         import numpy as np
         import pandas as pd
         from periodicity_spark.pipeline.multimodal import bmp_pixels, box_resize
@@ -376,12 +376,11 @@ def sample_frames(media: DataFrame, stride: int = 2) -> DataFrame:
     (one input video → many frame rows) is the Spark-side shape a real
     frame-extraction pipeline has; swap the stat columns for decoded
     tensors at will. Non-video / malformed payloads are skipped."""
-    from periodicity_spark.session import ensure_worker_imports
-
     ensure_worker_imports(media.sparkSession)
     st = max(int(stride), 1)
 
     def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prune_zip_importers()
         import pandas as pd
         from periodicity_spark.pipeline.multimodal import y4m_lumas
 
@@ -427,11 +426,10 @@ def synthesize_media(ids: DataFrame) -> DataFrame:
     media_id), a YUV4MPEG2 clip for video (dims/frame count/per-frame luma
     keyed by media_id). Exists so decode tests and the contract query
     exercise genuine parsers without shipping binary fixtures."""
-    from periodicity_spark.session import ensure_worker_imports
-
     ensure_worker_imports(ids.sparkSession)
 
     def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prune_zip_importers()
         import pandas as pd
         from periodicity_spark.pipeline.multimodal import make_bmp, make_wav
 
@@ -565,11 +563,10 @@ def audio_features(media: DataFrame) -> DataFrame:
     →1 for white noise) — the standard audio-quality/content signals.
     Arrow-batched mapInPandas, stateless per batch; non-audio or malformed
     payloads yield NULL features."""
-    from periodicity_spark.session import ensure_worker_imports
-
     ensure_worker_imports(media.sparkSession)
 
     def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prune_zip_importers()
         import numpy as np
         import pandas as pd
         from periodicity_spark.pipeline.multimodal import wav_pcm
@@ -628,11 +625,10 @@ def image_dhash(media: DataFrame) -> DataFrame:
     gradient bits packed into a BIGINT. Robust to uniform brightness and
     scale changes; one Arrow map stage → (media_id, dhash). Non-image /
     malformed payloads drop out (NULL-filtered)."""
-    from periodicity_spark.session import ensure_worker_imports
-
     ensure_worker_imports(media.sparkSession)
 
     def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prune_zip_importers()
         import numpy as np
         import pandas as pd
         from periodicity_spark.pipeline.multimodal import bmp_pixels, box_resize
@@ -722,12 +718,11 @@ def sample_frames_by_motion(
     information content instead of duration. → one row per kept frame:
     (media_id, frame_index, t_sec, motion, mean_luma); frame 0 has NULL
     motion. Arrow map stage, stateless per clip, no shuffle."""
-    from periodicity_spark.session import ensure_worker_imports
-
     ensure_worker_imports(media.sparkSession)
     th = float(threshold)
 
     def _batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        prune_zip_importers()
         import numpy as np
         import pandas as pd
         from periodicity_spark.pipeline.multimodal import y4m_lumas

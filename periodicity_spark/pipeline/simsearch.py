@@ -14,10 +14,14 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from periodicity_spark.session import scan_parallel
+from periodicity_spark.session import (
+    ensure_worker_imports,
+    prune_zip_importers,
+    scan_parallel,
+)
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -182,9 +186,11 @@ def multi_table_buckets(n_tables: int, n_planes: int, seed: int, dim: int):
     planes = rng.standard_normal((n_tables * n_planes, dim))
     weights = 1 << np.arange(n_planes, dtype=np.int64)
     nt, npl = n_tables, n_planes
+    ensure_worker_imports(SparkSession.active())
 
     @F.pandas_udf("array<long>")
     def _buckets(vecs):
+        prune_zip_importers()
         import numpy as np
         import pandas as pd
 
@@ -483,6 +489,7 @@ def assign_to_centroids(
         Csubs = [C[m] for m in members]
 
         def _assign(batches):
+            prune_zip_importers()
             import numpy as _np
             import pandas as _pd
 
@@ -526,6 +533,7 @@ def assign_to_centroids(
     else:
 
         def _assign(batches):
+            prune_zip_importers()
             import numpy as _np
             import pandas as _pd
 
@@ -547,6 +555,7 @@ def assign_to_centroids(
     schema = f"{id_col} {id_type}, centroid int"
     if with_vec:
         schema += f", {vec_col} {vec_type}"
+    ensure_worker_imports(corpus.sparkSession)
     return corpus.select(id_col, vec_col).mapInPandas(_assign, schema=schema)
 
 
@@ -723,8 +732,10 @@ def semantic_dedup(
         # ~256 MB so one skewed mega-cluster cannot OOM its task.
         id_dt = sided.schema["vec_id"].dataType.simpleString()
         thr = float(threshold)
+        ensure_worker_imports(corpus.sparkSession)
 
         def _cluster_drops(pdf):
+            prune_zip_importers()
             import numpy as np
             import pandas as pd
 
@@ -788,6 +799,7 @@ def semantic_dedup(
             )
 
             def _pair_drops(pdf):
+                prune_zip_importers()
                 import numpy as np
                 import pandas as pd
 
@@ -914,6 +926,7 @@ def hyperplane_band_signatures(
     id_type = vecs.schema[id_col].dataType.simpleString()
 
     def _sigs(batches):
+        prune_zip_importers()
         import numpy as _np
         import pandas as _pd
 
@@ -942,6 +955,7 @@ def hyperplane_band_signatures(
                 }
             )
 
+    ensure_worker_imports(vecs.sparkSession)
     return vecs.select(F.col(id_col), F.col(vec_col)).mapInPandas(
         _sigs, schema=f"vec_id {id_type}, band int, sig long"
     )

@@ -192,8 +192,13 @@ def winnow_fingerprints(
     (no-op whenever the scan already fans out)."""
     import re
 
-    from periodicity_spark.session import scan_parallel
+    from periodicity_spark.session import (
+        ensure_worker_imports,
+        prune_zip_importers,
+        scan_parallel,
+    )
 
+    ensure_worker_imports(docs.sparkSession)
     docs = scan_parallel(docs, key=id_col)
 
     B, M, kk, ww = WINNOW_BASE, WINNOW_MOD, k, window
@@ -201,6 +206,7 @@ def winnow_fingerprints(
     powers = [pow(B, kk - 1 - j, M) for j in range(kk)]
 
     def _batches(it):
+        prune_zip_importers()
         import numpy as np
         import pandas as pd
 

@@ -17,7 +17,7 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from periodicity_spark.session import ensure_worker_imports
+from periodicity_spark.session import ensure_worker_imports, prune_zip_importers
 from periodicity_spark.spectral.gls import gls_periodogram
 
 
@@ -126,6 +126,7 @@ def gls_periodogram_fast(
     csize = -(-n // nc)  # ceil
 
     def _per_group(pdf):
+        prune_zip_importers()
         import pandas as pd
         from periodicity_spark.spectral.fast import gls_power_fast as gpf
 

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from periodicity_spark.session import ensure_worker_imports, prune_zip_importers
 from periodicity_spark.sources.ingest import epoch_us_expr
 
 
@@ -126,6 +127,7 @@ def stream_ffill(events: DataFrame, null_every: int = 7) -> DataFrame:
     state_schema = "last double"
 
     def _fn(key, pdfs, state):
+        prune_zip_importers()
         import pandas as pd
 
         last = state.get[0] if state.exists else None
@@ -156,6 +158,7 @@ def stream_ffill(events: DataFrame, null_every: int = 7) -> DataFrame:
         )
         state.update((last,))
 
+    ensure_worker_imports(events.sparkSession)
     return events.groupBy("series_id").applyInPandasWithState(
         _fn,
         out_schema,
@@ -187,6 +190,7 @@ def stream_zscore(
     warm = max(2, int(min_n))
 
     def _fn(key, pdfs, state):
+        prune_zip_importers()
         import math
 
         import pandas as pd
@@ -227,6 +231,7 @@ def stream_zscore(
         )
         state.update((n, mean, m2))
 
+    ensure_worker_imports(events.sparkSession)
     return events.groupBy("series_id").applyInPandasWithState(
         _fn,
         out_schema,
@@ -369,6 +374,7 @@ def stream_topk(
     _coerce = int if int_val else float
 
     def _fn(key, pdfs, state):
+        prune_zip_importers()
         import pandas as pd
 
         seq, ids, vals = state.get if state.exists else (0, [], [])
@@ -391,6 +397,7 @@ def stream_topk(
         )
         state.update((seq, [c[0] for c in cand], [_coerce(c[1]) for c in cand]))
 
+    ensure_worker_imports(events.sparkSession)
     return events.groupBy(key_col).applyInPandasWithState(
         _fn,
         out_schema,
@@ -482,6 +489,7 @@ def stream_neardup(
     # streaming frame, as in streaming GLS)
     from periodicity_spark.session import scan_parallel
 
+    ensure_worker_imports(docs.sparkSession)
     docs = scan_parallel(docs, key="doc_id")
     sig = minhash_signatures_per_row(docs, k=k, n_hashes=n_hashes, r=r)
     cap = int(max_bucket)
@@ -491,6 +499,7 @@ def stream_neardup(
     id_dt = {f.name: f.dataType.simpleString() for f in docs.schema.fields}["doc_id"]
 
     def _fn(key, pdfs, state):
+        prune_zip_importers()
         import pandas as pd
 
         def _unwrap(x):

@@ -9,7 +9,7 @@ kind of reduction Spark does well at scale (SURVEY.md §2.4).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from periodicity_spark.operators.acf import acf_fft
@@ -154,19 +154,16 @@ def denoise(
 def with_coi_mask(tf: DataFrame) -> DataFrame:
     """Adds ``in_coi``: √2·period < min(t − tmin, tmax − t)
     (reference mask_coi, timefrequency.py:256-262). Pure column predicate
-    + one broadcast of per-series time bounds."""
-    bounds = tf.groupBy("series_id").agg(
-        F.min("time").alias("_t0"), F.max("time").alias("_t1")
-    )
+    over per-series time bounds taken in a window, so ``tf`` is evaluated
+    once: joining ``tf`` to an aggregate of itself would run its whole
+    subtree (the CWT kernel, for ``wps`` output) twice."""
+    w = Window.partitionBy("series_id")
+    t0 = F.min("time").over(w)
+    t1 = F.max("time").over(w)
     period = 1.0 / F.col("frequency")
-    return (
-        tf.join(F.broadcast(bounds), "series_id")
-        .withColumn(
-            "in_coi",
-            F.lit(SQRT2) * period
-            < F.least(F.col("time") - F.col("_t0"), F.col("_t1") - F.col("time")),
-        )
-        .drop("_t0", "_t1")
+    return tf.withColumn(
+        "in_coi",
+        F.lit(SQRT2) * period < F.least(F.col("time") - t0, t1 - F.col("time")),
     )
 
 

@@ -185,6 +185,14 @@ def test_exact_cosine_kernel_is_the_deliberate_cartesian(spark, sf_dir):
     assert "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan
 
 
+def test_wps_gwps_runs_the_cwt_kernel_once(spark, sf_dir):
+    """The masked GWPS takes the COI's per-series time bounds from a window
+    over the CWT output. Joining that output to an aggregate of itself
+    would plan the whole scan → CWT Arrow kernel subtree twice."""
+    plan = _final_plan(spark, sf_dir, "wps_gwps")
+    assert plan.count("FlatMapGroupsInPandas") == 1, plan
+
+
 def test_tpch_q15_revenue_view_shuffle_is_reused(spark, sf_dir):
     """Q15 references the revenue view twice (totals + their max). The two
     references must share ONE lineitem scan+shuffle via ReusedExchange —
