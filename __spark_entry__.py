@@ -5153,14 +5153,12 @@ def q_lmd(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_ceemdan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # CEEMDAN (reference decomposition.py:231-359) via the bucketed "local"
-    # strategy — the many-small-series shape; per-mode energies, rows-only
-    # (white-noise ensemble — no SQL twin; differentials in tests/)
+    # CEEMDAN (reference decomposition.py:231-359), one bucketed Arrow task
+    # per series; per-mode energies, rows-only (white-noise ensemble — no
+    # SQL twin; differentials in tests/)
     from periodicity_spark.decomposition.ceemdan import CEEMDAN
 
-    modes = CEEMDAN(ensemble_size=8, random_seed=7, strategy="local")(
-        _ts(spark, sf_dir)
-    )
+    modes = CEEMDAN(ensemble_size=8, random_seed=7)(_ts(spark, sf_dir))
     return modes.groupBy("series_id", "mode").agg(
         F.count(F.lit(1)).alias("n"),
         F.round(F.sum(F.col("value") * F.col("value")), 6).alias("energy"),

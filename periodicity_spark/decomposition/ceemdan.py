@@ -1,26 +1,28 @@
-"""Distributed CEEMDAN (reference decomposition.py:210-342; Torres 2011,
-Colominas 2014).
+"""CEEMDAN as a Spark operator (reference decomposition.py:210-342; Torres
+2011, Colominas 2014).
 
-Two-level parallelism, the best Spark fit in the reference (SURVEY.md §2.9):
-the ensemble axis (series × realization) is exploded into the partitioning
-key, each per-realization EMD runs as an Arrow UDF task, and the ensemble
-average that defines each mode is a single groupBy(series, time) aggregate.
-The driver loops only over mode index k (a handful of iterations), caching
-the per-series residue between jobs.
+Parallel across series: one bucketed Arrow stage (``session.grouped_apply``)
+runs the whole decomposition of each series in the NumPy kernel
+``kernels.ceemdan_1d`` — the white-noise ensemble, the per-mode ensemble
+average and the stopping tests. ``CEEMDAN(...)(ts)`` is a lazy plan: no
+job at build time, no driver loop over modes, nothing cached.
+
+The ensemble axis is not spread over tasks. A (series × realization) plan
+needs a driver-synced average and several jobs per mode; on a 4-core box,
+with one or two 1,000-point series, it ran 1.4-6× slower than this stage,
+and on a noisy one it ran the driver out of heap.
 
 Determinism: noise for (series, realization) is seeded by
-crc32(series_id) ⊕ seed ⊕ realization — reproducible regardless of task
-placement (no driver-side RNG state crosses the wire).
+crc32(series_id) ⊕ seed·2654435761 + realization — reproducible regardless
+of task placement (no driver-side RNG state crosses the wire).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from periodicity_spark.session import ensure_worker_imports
-
-_MODES_SCHEMA = "series_id string, realization int, mode int, time double, value double"
+from periodicity_spark.session import grouped_apply
 
 
 class CEEMDAN:
@@ -32,106 +34,35 @@ class CEEMDAN:
         random_seed: int | None = None,
         max_modes: int | None = None,
         hard_mode_cap: int = 16,
-        strategy: str = "auto",
         **emd_kwargs,
     ):
+        """``emd_kwargs``: the sifting tunables of ``kernels.emd_iter``
+        (max_iter, pad_width, theta_1, theta_2, alpha); any other name
+        raises TypeError here rather than in a Python task at action time."""
+        import inspect
+
+        from periodicity_spark.decomposition.kernels import emd_iter
+
+        tunables = list(inspect.signature(emd_iter).parameters)[2:]
+        unknown = sorted(set(emd_kwargs) - set(tunables))
+        if unknown:
+            raise TypeError(
+                f"CEEMDAN got unexpected keyword argument(s) {unknown}; "
+                f"EMD tunables are {tunables}"
+            )
         self.epsilon = epsilon
         self.ensemble_size = ensemble_size
         self.min_energy = min_energy
         self.random_seed = 0 if random_seed is None else int(random_seed)
         self.max_modes = max_modes
         self.hard_mode_cap = hard_mode_cap
-        if strategy not in ("auto", "ensemble", "local"):
-            raise ValueError(f"strategy must be auto/ensemble/local, got {strategy!r}")
-        self.strategy = strategy
         self.emd_kwargs = emd_kwargs
 
-    # -- per-(series, realization) UDF bodies --------------------------------
+    def __call__(self, ts: DataFrame) -> DataFrame:
+        """→ modes DF (series_id, mode, time, value), modes 0..k per series.
 
-    def _white_noise_modes_udf(self):
-        seed = self.random_seed
-        emd_kw = dict(self.emd_kwargs)
-
-        def _fn(pdf):
-            import zlib
-
-            import numpy as np
-            import pandas as pd
-            from periodicity_spark.decomposition.kernels import emd
-
-            pdf = pdf.sort_values("time")
-            sid = pdf["series_id"].iloc[0]
-            realization = int(pdf["realization"].iloc[0])
-            t = pdf["time"].to_numpy(float)
-            rng = np.random.default_rng(
-                (zlib.crc32(sid.encode()) & 0xFFFFFFFF) ^ (seed * 2654435761 + realization) & 0x7FFFFFFF
-            )
-            noise = rng.standard_normal(len(t))
-            modes, _ = emd(t, noise, **emd_kw)
-            frames = [
-                pd.DataFrame(
-                    {"series_id": sid, "realization": realization, "mode": k, "time": t, "value": m}
-                )
-                for k, m in enumerate(modes)
-            ]
-            if not frames:
-                return pd.DataFrame(
-                    columns=["series_id", "realization", "mode", "time", "value"]
-                )
-            return pd.concat(frames, ignore_index=True)
-
-        return _fn
-
-    def _realization_udf(self):
-        """EMD(max_modes=1) of (residue + β·noise_mode_k); returns the
-        per-realization mu contribution noisy_residue − mode
-        (reference _realization, decomposition.py:252-265)."""
-        emd_kw = dict(self.emd_kwargs)
-
-        def _fn(pdf):
-            import pandas as pd
-            from periodicity_spark.decomposition.kernels import emd
-
-            pdf = pdf.sort_values("time")
-            t = pdf["time"].to_numpy(float)
-            noisy = pdf["noisy"].to_numpy(float)
-            modes, _ = emd(t, noisy, max_modes=1, **emd_kw)
-            contrib = noisy - modes[0] if modes else noisy - noisy
-            return pd.DataFrame(
-                {
-                    "series_id": pdf["series_id"].iloc[0],
-                    "realization": int(pdf["realization"].iloc[0]),
-                    "mode": 0,
-                    "time": t,
-                    "value": contrib,
-                }
-            )
-
-        return _fn
-
-    def _nmodes_udf(self):
-        emd_kw = dict(self.emd_kwargs)
-
-        def _fn(pdf):
-            import pandas as pd
-            from periodicity_spark.decomposition.kernels import emd
-
-            pdf = pdf.sort_values("time")
-            t = pdf["time"].to_numpy(float)
-            x = pdf["value"].to_numpy(float)
-            modes, _ = emd(t, x, **emd_kw)
-            return pd.DataFrame(
-                {"series_id": [pdf["series_id"].iloc[0]], "n_modes": [len(modes)]}
-            )
-
-        return _fn
-
-    def _local(self, base: DataFrame) -> DataFrame:
-        """Bucketed per-series kernel path: one applyInPandas stage runs the
-        full CEEMDAN per series (ceemdan_1d), so the job count is constant in
-        mode count and the driver loop disappears."""
-        from periodicity_spark.session import grouped_apply
-
+        NULL values are dropped first. A series with zero variance or fewer
+        than 4 points yields no rows."""
         eps, ens, me = self.epsilon, self.ensemble_size, self.min_energy
         seed, mm, cap = self.random_seed, self.max_modes, self.hard_mode_cap
         emd_kw = dict(self.emd_kwargs)
@@ -169,171 +100,7 @@ class CEEMDAN:
                 ignore_index=True,
             )
 
+        base = ts.filter(F.col("value").isNotNull()).select("series_id", "time", "value")
         return grouped_apply(
             base, _per_series, "series_id string, mode int, time double, value double"
         )
-
-    # ------------------------------------------------------------------------
-
-    def __call__(self, ts: DataFrame) -> DataFrame:
-        """→ modes DF (series_id, mode, time, value), modes 0..k per series.
-
-        Strategy pick (same idea as the GLS exact/fast switch): "ensemble"
-        parallelizes over (series × realization) with one driver-synced
-        ensemble average per mode — right when a few LARGE series must spread
-        across the cluster, but the job count grows ~6× per mode. "local"
-        runs the whole decomposition per series inside one bucketed Arrow
-        task (ceemdan_1d kernel, identical math and seeding) — constant job
-        count, zero driver loop; right for the many-small-series shape where
-        parallelism comes from series count. "auto" counts series once and
-        goes local when there are at least as many series as cores."""
-        spark = ts.sparkSession
-        ensure_worker_imports(spark)
-        base = ts.filter(F.col("value").isNotNull()).select("series_id", "time", "value")
-
-        strategy = self.strategy
-        if strategy == "auto":
-            n_series = base.select("series_id").distinct().count()
-            strategy = (
-                "local"
-                if n_series >= spark.sparkContext.defaultParallelism
-                else "ensemble"
-            )
-        if strategy == "local":
-            return self._local(base)
-
-        sigma = base.groupBy("series_id").agg(F.stddev_pop("value").alias("sigma_x"))
-        sigma = sigma.filter(F.col("sigma_x") > 0).cache()
-
-        # white-noise ensemble: explode realization ids, EMD each
-        reals = spark.range(self.ensemble_size).select(
-            F.col("id").cast("int").alias("realization")
-        )
-        noise_input = base.select("series_id", "time").crossJoin(F.broadcast(reals))
-        from periodicity_spark.session import grouped_apply
-
-        noise_modes = grouped_apply(
-            noise_input,
-            self._white_noise_modes_udf(),
-            _MODES_SCHEMA,
-            group_cols=("series_id", "realization"),
-        ).persist()
-        noise_modes.count()
-
-        # per-(series, realization) std of noise mode 0 — the k=0 beta scale
-        noise0_std = (
-            noise_modes.filter(F.col("mode") == 0)
-            .groupBy("series_id", "realization")
-            .agg(F.stddev_pop("value").alias("_n0std"))
-        )
-
-        # residue starts as the sigma-normalized signal
-        residue = (
-            base.join(F.broadcast(sigma), "series_id")
-            .select("series_id", "time", (F.col("value") / F.col("sigma_x")).alias("value"))
-            .cache()
-        )
-        residue.count()
-
-        collected_modes: list[DataFrame] = []
-        max_modes = self.max_modes if self.max_modes is not None else self.hard_mode_cap
-        k = 0
-        active = sigma.select("series_id")
-        while k < min(max_modes, self.hard_mode_cap):
-            beta = residue.groupBy("series_id").agg(
-                (F.lit(self.epsilon) * F.stddev_pop("value")).alias("_beta")
-            )
-            nm_k = noise_modes.filter(F.col("mode") == k).select(
-                "series_id", "realization", "time", F.col("value").alias("_nk")
-            )
-            noisy = (
-                residue.crossJoin(F.broadcast(spark.range(self.ensemble_size).select(F.col("id").cast("int").alias("realization"))))
-                .join(F.broadcast(beta), "series_id")
-                .join(nm_k, ["series_id", "realization", "time"], "left")
-            )
-            if k == 0:
-                noisy = noisy.join(F.broadcast(noise0_std), ["series_id", "realization"], "left")
-                scale = F.col("_beta") / F.col("_n0std")
-            else:
-                scale = F.col("_beta")
-            noisy = noisy.select(
-                "series_id",
-                "realization",
-                "time",
-                (
-                    F.col("value")
-                    + F.when(F.col("_nk").isNotNull(), scale * F.col("_nk")).otherwise(0.0)
-                ).alias("noisy"),
-            )
-            contrib = grouped_apply(
-                noisy,
-                self._realization_udf(),
-                _MODES_SCHEMA,
-                group_cols=("series_id", "realization"),
-            )
-            mu = (
-                contrib.groupBy("series_id", "time")
-                .agg(F.avg("value").alias("_mu"))
-            )
-            imf_k = (
-                residue.join(mu, ["series_id", "time"])
-                .select(
-                    "series_id",
-                    F.lit(k).alias("mode"),
-                    "time",
-                    (F.col("value") - F.col("_mu")).alias("value"),
-                )
-                .cache()
-            )
-            imf_k.count()
-            collected_modes.append(imf_k)
-            new_residue = (
-                mu.select("series_id", "time", F.col("_mu").alias("value")).cache()
-            )
-            new_residue.count()
-            residue.unpersist()
-            residue = new_residue
-            k += 1
-
-            # stopping: residue energy, then EMD mode count of the residue
-            stats = residue.groupBy("series_id").agg(F.var_pop("value").alias("_var"))
-            nmodes = grouped_apply(
-                residue, self._nmodes_udf(), "series_id string, n_modes int"
-            )
-            status = stats.join(nmodes, "series_id").select(
-                "series_id",
-                (F.col("_var") < F.lit(self.min_energy)).alias("low_energy"),
-                "n_modes",
-            ).collect()
-            final_as_imf = [
-                r["series_id"] for r in status if (not r["low_energy"]) and r["n_modes"] == 1
-            ]
-            still_active = [
-                r["series_id"]
-                for r in status
-                if (not r["low_energy"]) and r["n_modes"] > 1
-            ]
-            if final_as_imf and k < max_modes:
-                fin = spark.createDataFrame(
-                    [(s,) for s in final_as_imf], "series_id string"
-                )
-                collected_modes.append(
-                    residue.join(F.broadcast(fin), "series_id").select(
-                        "series_id", F.lit(k).alias("mode"), "time", "value"
-                    )
-                )
-            if not still_active:
-                break
-            act = spark.createDataFrame([(s,) for s in still_active], "series_id string")
-            residue = residue.join(F.broadcast(act), "series_id").cache()
-            residue.count()
-
-        out = collected_modes[0]
-        for m in collected_modes[1:]:
-            out = out.unionByName(m)
-        # undo the initial normalization (reference decomposition.py:336-337)
-        result = out.join(F.broadcast(sigma), "series_id").select(
-            "series_id", "mode", "time", (F.col("value") * F.col("sigma_x")).alias("value")
-        )
-        noise_modes.unpersist()
-        return result

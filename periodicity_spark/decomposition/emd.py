@@ -8,8 +8,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from periodicity_spark.session import ensure_worker_imports
-
 
 def emd_modes(
     ts: DataFrame,
@@ -23,7 +21,6 @@ def emd_modes(
 ) -> DataFrame:
     """→ modes DF (series_id, mode, time, value); mode −1 is the residue when
     ``include_residue``."""
-    ensure_worker_imports(ts.sparkSession)
     mm = max_modes
 
     def _per_series(pdf):
@@ -66,7 +63,6 @@ def lmd_modes(
     """Local Mean Decomposition → (series_id, mode, time, amp, func):
     product functions PFₖ = Aₖ·Fₖ (reference returns [A, F] pairs,
     decomposition.py:196)."""
-    ensure_worker_imports(ts.sparkSession)
     mm = max_modes
 
     def _per_series(pdf):
@@ -137,7 +133,6 @@ def ceemdan_postprocess(modes: DataFrame, **emd_kwargs) -> DataFrame:
     (reference postprocessing(), decomposition.py:344-359). The whole
     re-sift chain is sequential per series → one Arrow UDF per series, no
     driver loop. Input/output: (series_id, mode, time, value)."""
-    ensure_worker_imports(modes.sparkSession)
     kw = dict(emd_kwargs)
 
     def _per_series(pdf):

@@ -566,12 +566,13 @@ def ceemdan_1d(
     sid_crc=0,
     **emd_kw,
 ):
-    """Single-series CEEMDAN (reference decomposition.py:210-342) — the same
-    algorithm the distributed CEEMDAN class runs as Spark jobs, here as one
-    in-process kernel so a bucketed Arrow task can decompose a whole series
-    with zero driver round-trips. Seeding matches the distributed path
-    (crc32(series_id) ⊕ seed·2654435761 + realization), so both strategies
-    draw identical noise. → list of modes (each len(t))."""
+    """Single-series CEEMDAN (reference decomposition.py:210-342), the
+    kernel the CEEMDAN operator runs in one bucketed Arrow task per series.
+    Realization r of the white-noise ensemble is seeded by
+    sid_crc ⊕ seed·2654435761 + r (sid_crc = crc32(series_id) in the
+    operator), so a series decomposes the same wherever it runs. A series
+    with zero variance or fewer than 4 points has no modes.
+    → list of modes (each len(t))."""
     t = np.asarray(t, float)
     x = np.asarray(x, float)
     sigma_x = float(np.std(x))

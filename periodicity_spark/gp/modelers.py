@@ -20,7 +20,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from periodicity_spark.operators.clean import acf_period_quality
-from periodicity_spark.session import ensure_worker_imports
 
 
 def make_gaussian_prior_mixture(
@@ -113,7 +112,6 @@ def gp_map(ts: DataFrame, err_col: str | None = None) -> DataFrame:
     """Per-series MAP fit of the quasi-periodic GP
     (reference minimize(), gp.py:231-244): → (series_id, period_map, nll,
     mean, log_jitter). Nelder-Mead on NLL − log-prior."""
-    ensure_worker_imports(ts.sparkSession)
     ec = err_col
 
     def _per_series(pdf):
@@ -229,7 +227,6 @@ def celerite_map(
     model (reference CeleriteModeler.loocv, gp.py:387-396) — O(N²·J) per
     series, a model-comparison diagnostic for moderate N, not a fit-loop
     objective."""
-    ensure_worker_imports(ts.sparkSession)
     ec, kern, init_mode, mi, lcv = err_col, kernel, init, max_iter, loocv
     ns = max(int(n_starts), 1)
     # period-coordinate start points, centered on the prior median
@@ -343,7 +340,6 @@ def celerite_mcmc(
     ``init`` / ``period_prior`` as in celerite_map: "gls" seeds init_period
     with the engine's own periodogram; period_prior attaches the data-driven
     make_gaussian_prior mixture as the period quantile (make_ppf)."""
-    ensure_worker_imports(ts.sparkSession)
     ec, kern, init_mode = err_col, kernel, init
     nw, nst, nb, sd, mmi = n_walkers, n_steps, burn, seed, map_max_iter
     freqs = None if psd_at is None else [float(f) for f in psd_at]
@@ -441,7 +437,6 @@ def gp_mcmc_period(
             ts, kernel=kernel, err_col=err_col, n_walkers=n_walkers,
             n_steps=n_steps, burn=burn, seed=seed,
         ).select("series_id", "period_median", "period_p16", "period_p84")
-    ensure_worker_imports(ts.sparkSession)
     ec = err_col
     nw, ns, nb, sd = n_walkers, n_steps, burn, seed
 

@@ -353,9 +353,6 @@ def butterworth(
     """Zero-phase IIR Butterworth band/low/high-pass (reference
     core.py:776-807). Inherently recursive → per-series Arrow UDF around the
     NumPy design in operators/iir.py; parallel across series only."""
-    from periodicity_spark.session import ensure_worker_imports
-
-    ensure_worker_imports(ts.sparkSession)
     if fmin is None and fmax is None:
         raise ValueError("At least one of 'fmin' and 'fmax' must be given!")
     lo, hi, ordn = fmin, fmax, order
@@ -402,9 +399,6 @@ def acf_period_quality(ts: DataFrame, p_min: float, p_max: float) -> DataFrame:
     least-squares fit → quality factor (reference core.py:809-853).
     → (series_id, best_period, height, quality). The whole pipeline runs
     per series in one Arrow UDF (each step is sequential on a short ACF)."""
-    from periodicity_spark.session import ensure_worker_imports
-
-    ensure_worker_imports(ts.sparkSession)
     pmin_, pmax_ = float(p_min), float(p_max)
 
     def _per_series(pdf):
@@ -503,9 +497,6 @@ def mirror_fill(ts: DataFrame) -> DataFrame:
     run is filled by reflecting the neighboring samples into the gap from
     both sides; odd-length centers average their filled neighbors. Gap-local
     positional index arithmetic → per-series Arrow UDF."""
-    from periodicity_spark.session import ensure_worker_imports
-
-    ensure_worker_imports(ts.sparkSession)
 
     def _per_series(pdf):
         import numpy as np

@@ -208,9 +208,6 @@ def get_envelope(ts: DataFrame, pad_width: int = 2) -> DataFrame:
     (reference get_envelope, core.py:741-774; invariant test
     tests/test_core.py:37-48). Spline interpolation is global per series →
     Arrow UDF over the decomposition kernels. → (series_id, time, upper, lower)."""
-    from periodicity_spark.session import ensure_worker_imports
-
-    ensure_worker_imports(ts.sparkSession)
     pw = pad_width
 
     def _per_series(pdf):

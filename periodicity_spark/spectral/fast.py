@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from periodicity_spark.session import ensure_worker_imports, prune_zip_importers
-from periodicity_spark.spectral.gls import gls_periodogram
+from periodicity_spark.spectral.gls import gls_periodogram, gls_power_np
 
 
 def _spread_extirpolate(t: np.ndarray, w: np.ndarray, nfft: int, df: float, fmin: float):
@@ -71,8 +71,8 @@ def trig_sums_fast(t, w, df, nf, fmin, oversample=16):
 
 
 def gls_power_fast(t, y, fmin, df, nf, fit_mean=True, err=None):
-    """Per-series GLS power via extirpolated trig sums (Zechmeister-Kürster
-    finish identical to the distributed path)."""
+    """Per-series GLS power via extirpolated trig sums and the shared
+    Zechmeister-Kürster finish (gls.gls_power_np)."""
     t = np.asarray(t, float)
     y = np.asarray(y, float)
     w = np.ones(len(y)) if err is None else np.asarray(err, float) ** -2.0
@@ -82,24 +82,8 @@ def gls_power_fast(t, y, fmin, df, nf, fit_mean=True, err=None):
     yy = np.dot(w, yc**2)
     Sh, Ch = trig_sums_fast(t, w * yc, df, nf, fmin)
     S2, C2 = trig_sums_fast(t, w, 2 * df, nf, 2 * fmin)
-    if fit_mean:
-        S, C = trig_sums_fast(t, w, df, nf, fmin)
-        tan2wt = (S2 - 2 * S * C) / (C2 - (C * C - S * S))
-    else:
-        S = C = 0.0
-        tan2wt = S2 / C2
-    C2w = 1 / np.sqrt(1 + tan2wt**2)
-    S2w = tan2wt * C2w
-    Cw = np.sqrt(0.5) * np.sqrt(1 + C2w)
-    Sw = np.sqrt(0.5) * np.sign(S2w) * np.sqrt(1 - C2w)
-    YC = Ch * Cw + Sh * Sw
-    YS = Sh * Cw - Ch * Sw
-    CC = 0.5 * (1 + C2 * C2w + S2 * S2w)
-    SS = 0.5 * (1 - C2 * C2w - S2 * S2w)
-    if fit_mean:
-        CC = CC - (C * Cw + S * Sw) ** 2
-        SS = SS - (S * Cw - C * Sw) ** 2
-    return (YC * YC / CC + YS * YS / SS) / yy
+    S, C = trig_sums_fast(t, w, df, nf, fmin) if fit_mean else (None, None)
+    return gls_power_np(S, C, S2, C2, Sh, Ch, fit_mean) / yy
 
 
 def gls_periodogram_fast(

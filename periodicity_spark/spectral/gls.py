@@ -319,6 +319,35 @@ def gls_periodogram(
     return sums.selectExpr("series_id", "frequency", f"{power} AS power")
 
 
+def gls_power_np(S, C, S2, C2, Sh, Ch, fit_mean=True):
+    """Zechmeister-Kürster power finish (reference spectral.py:118-132) from
+    the six weighted trig sums over numpy arrays: S, C = Σw·sin, Σw·cos;
+    S2, C2 = Σw·sin 2ωt, Σw·cos 2ωt; Sh, Ch = Σw·Y·sin, Σw·Y·cos of the
+    centred values. → YC²/CC + YS²/SS, before the 1/YY (or PSD)
+    normalization. S and C are unused when not ``fit_mean``. The finish of
+    both numpy paths: gls_arrow's exact sums and gls_power_fast's
+    extirpolated ones."""
+    import numpy as np
+
+    if fit_mean:
+        tan2wt = (S2 - 2.0 * S * C) / (C2 - (C * C - S * S))
+    else:
+        tan2wt = S2 / C2
+    nrm = np.sqrt(1.0 + tan2wt * tan2wt)
+    S2w = tan2wt / nrm
+    C2w = 1.0 / nrm
+    Cw = np.sqrt(0.5) * np.sqrt(1.0 + C2w)
+    Sw = np.sqrt(0.5) * np.sign(S2w) * np.sqrt(1.0 - C2w)
+    YC = Ch * Cw + Sh * Sw
+    YS = Sh * Cw - Ch * Sw
+    CC = 0.5 * (1.0 + C2 * C2w + S2 * S2w)
+    SS = 0.5 * (1.0 - C2 * C2w - S2 * S2w)
+    if fit_mean:
+        CC = CC - (C * Cw + S * Sw) ** 2
+        SS = SS - (S * Cw - C * Sw) ** 2
+    return YC * YC / CC + YS * YS / SS
+
+
 def gls_arrow(
     ts: DataFrame,
     freq_grid: DataFrame,
@@ -366,6 +395,7 @@ def gls_arrow(
     def _kern(g):
         import numpy as np
         import pandas as pd
+        from periodicity_spark.spectral.gls import gls_power_np
 
         g = g[g["value"].notna()]
         n = len(g)
@@ -390,23 +420,7 @@ def gls_arrow(
         Sh = s @ wY
         Ch = c @ wY
         with np.errstate(divide="ignore", invalid="ignore"):
-            if fm:
-                tan2wt = (S2 - 2.0 * S * C) / (C2 - (C * C - S * S))
-            else:
-                tan2wt = S2 / C2
-            nrm = np.sqrt(1.0 + tan2wt * tan2wt)
-            S2w = tan2wt / nrm
-            C2w = 1.0 / nrm
-            Cw = np.sqrt(0.5) * np.sqrt(1.0 + C2w)
-            Sw = np.sqrt(0.5) * np.sign(S2w) * np.sqrt(1.0 - C2w)
-            YC = Ch * Cw + Sh * Sw
-            YS = Sh * Cw - Ch * Sw
-            CC = 0.5 * (1.0 + C2 * C2w + S2 * S2w)
-            SS = 0.5 * (1.0 - C2 * C2w - S2 * S2w)
-            if fm:
-                CC = CC - (C * Cw + S * Sw) ** 2
-                SS = SS - (S * Cw - C * Sw) ** 2
-            power = YC * YC / CC + YS * YS / SS
+            power = gls_power_np(S, C, S2, C2, Sh, Ch, fm)
             if want_psd:
                 power = power * (0.5 * wsum)
             else:

@@ -13,14 +13,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from periodicity_spark.decomposition.emd import emd_modes
-from periodicity_spark.session import ensure_worker_imports
 
 
 def instantaneous(modes: DataFrame, method: str = "DQ", norm_type: str = "spline",
                   norm_iter: int = 10, smooth_width: float | None = None) -> DataFrame:
     """Per-(series, mode) instantaneous frequency/amplitude rows:
     → (series_id, mode, time, freq, amp)."""
-    ensure_worker_imports(modes.sparkSession)
     m = method.upper()
     nt = norm_type.lower()
     ni = norm_iter

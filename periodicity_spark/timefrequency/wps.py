@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from periodicity_spark.operators.acf import acf_fft
 from periodicity_spark.operators.resample import fill_gaps, interp_linear
-from periodicity_spark.session import ensure_worker_imports
 
 SQRT2 = 2.0 ** 0.5
 
@@ -29,7 +28,6 @@ def wps(
     input, sampling assumed uniform per series (median_dt used as dt, like
     the reference). ``with_coefs`` keeps the complex coefficients for
     reconstruct()."""
-    ensure_worker_imports(ts.sparkSession)
     plist = [float(p) for p in periods]
     CC = float(C)
     BB = float(B)

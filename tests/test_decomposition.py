@@ -71,26 +71,81 @@ def test_ceemdan_two_tones_thresholds(spark):
     assert np.linalg.norm(total - (s1 + s2)) / np.linalg.norm(s1 + s2) < 1e-15
 
 
-def test_ceemdan_local_strategy_matches_ensemble(spark):
-    """The bucketed per-series kernel ("local") and the distributed ensemble
-    path must compute the same decomposition — same algorithm, same seeds;
-    only float summation order differs (numpy sequential vs Spark avg)."""
-    import pandas as pd
+def test_ceemdan_rows_equal_driver_kernel(spark):
+    """CEEMDAN()(ts) is ceemdan_1d per series, seeded by crc32(series_id):
+    the Spark rows equal the kernel run on the driver exactly. Series of
+    different lengths, unsorted input, a NULL value (dropped first), a
+    constant series and a 3-point series (both decompose to no modes)."""
+    import zlib
 
-    t = np.arange(300).astype(float)
-    x = np.sin(2 * np.pi * 0.06 * t) + 0.3 * np.sin(2 * np.pi * 0.011 * t)
-    ts = spark.createDataFrame(
-        pd.DataFrame({"series_id": "s", "time": t, "value": x})
-    )
-    kw = dict(ensemble_size=12, random_seed=5, max_modes=3)
-    ens = CEEMDAN(strategy="ensemble", **kw)(ts).toPandas()
-    loc = CEEMDAN(strategy="local", **kw)(ts).toPandas()
-    pe = ens.pivot_table(index="time", columns="mode", values="value").sort_index()
-    pl = loc.pivot_table(index="time", columns="mode", values="value").sort_index()
-    assert list(pe.columns) == list(pl.columns)
-    for k in pe.columns:
-        denom = np.linalg.norm(pe[k]) or 1.0
-        assert np.linalg.norm(pe[k] - pl[k]) / denom < 1e-6, f"mode {k}"
+    from periodicity_spark.decomposition.kernels import ceemdan_1d
+
+    rng = np.random.default_rng(11)
+    t_a = np.sort(rng.uniform(0, 100, 160))
+    t_b = np.arange(90, dtype=float)
+    series = {
+        "a": (t_a, np.sin(2 * np.pi * 0.21 * t_a) + 0.4 * np.sin(2 * np.pi * 0.03 * t_a)),
+        "b": (t_b, np.sin(2 * np.pi * 0.1 * t_b) + 0.2 * rng.standard_normal(90)),
+        "const": (np.arange(40, dtype=float), np.full(40, 2.5)),
+        "short": (np.arange(3, dtype=float), np.array([1.0, -1.0, 0.5])),
+    }
+    rows = [
+        (sid, float(ti), float(vi)) for sid, (t, v) in series.items() for ti, vi in zip(t, v)
+    ]
+    rows.append(("b", 200.0, None))
+    rows = [rows[i] for i in rng.permutation(len(rows))]
+    ts = spark.createDataFrame(rows, "series_id string, time double, value double")
+    kw = dict(ensemble_size=6, random_seed=3, max_modes=3)
+    got = CEEMDAN(**kw)(ts).toPandas().sort_values(["series_id", "mode", "time"])
+
+    want = []
+    for sid, (t, v) in series.items():
+        modes = ceemdan_1d(
+            t, v, ensemble_size=6, seed=3, max_modes=3, sid_crc=zlib.crc32(sid.encode())
+        )
+        want += [
+            pd.DataFrame({"series_id": sid, "mode": k, "time": t, "value": m})
+            for k, m in enumerate(modes)
+        ]
+    want = pd.concat(want, ignore_index=True).sort_values(["series_id", "mode", "time"])
+    assert set(got["series_id"]) == {"a", "b"}
+    assert len(got) == len(want)
+    for col in ("series_id", "mode", "time", "value"):
+        assert got[col].tolist() == want[col].tolist(), col
+
+
+def test_ceemdan_builds_without_a_spark_job(spark):
+    """Building CEEMDAN()(ts) is a lazy plan: no job runs until an action.
+    A one-job control action in the same group proves the listener has
+    caught up."""
+    import time
+
+    sc = spark.sparkContext
+    t = np.arange(8.0)
+    ts = spark.createDataFrame(pd.DataFrame({"series_id": "s", "time": t, "value": np.sin(t)}))
+    group = "ceemdan_build_no_job"
+    sc.setJobGroup(group, "CEEMDAN plan build")
+    try:
+        CEEMDAN(ensemble_size=4)(ts)
+        sc.parallelize([0], 1).count()
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    tracker = sc.statusTracker()
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup(group) and time.time() < deadline:
+        time.sleep(0.1)
+    assert len(tracker.getJobIdsForGroup(group)) == 1
+
+
+def test_ceemdan_rejects_unknown_kwargs():
+    """Only emd_iter's tunables pass through; anything else (a misspelling,
+    or the removed ``strategy=``) raises when the operator is built."""
+    for bad in ({"strategy": "local"}, {"max_iters": 10}, {"theta1": 0.1}):
+        with pytest.raises(TypeError):
+            CEEMDAN(**bad)
+    op = CEEMDAN(max_iter=50, pad_width=3, theta_1=0.1, theta_2=0.6, alpha=0.1)
+    assert op.emd_kwargs["max_iter"] == 50
 
 
 def test_lmd_survives_irregular_gap_short_series():
