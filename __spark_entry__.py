@@ -3835,12 +3835,11 @@ def q_simsearch_mllib(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_simsearch_auto(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """pipeline.simsearch.ann_topk_auto — the ANN strategy pick (the
-    engine-level analog of gls_auto): corpus ≤ 100k rows → exact
-    brute-force (one scan, broadcast probes; exactness is free when the
-    scan is cheap), larger → sign-hash multi-table LSH, never the
-    geometry-bound MLlib path. At every driver SF the corpus is under the
-    crossover, so the route is the exact scan and the oracle is
+    """pipeline.simsearch.ann_topk_auto — the ANN strategy pick: corpus
+    ≤ 100k rows → exact brute-force (one scan, broadcast probes; exactness
+    is free when the scan is cheap), larger → sign-hash multi-table LSH,
+    never the geometry-bound MLlib path. At every driver SF the corpus is
+    under the crossover, so the route is the exact scan and the oracle is
     simsearch_topk's SQL — the strategy function itself is what's under
     test (the LSH branch's recall is pinned in tests/test_pipeline.py)."""
     emb = _emb(spark, sf_dir)

@@ -70,9 +70,16 @@ def qp_log_prior(theta, y_mean, y_sigma, jitter, init_log_p, sd_p):
 
 
 def gls_best_period(t: np.ndarray, y: np.ndarray, n_grid: int = 200) -> float:
-    """Quick direct-sum GLS scan (Zechmeister & Kürster 2009 fit-mean
-    formulas, as in spectral/gls.py) for GP initialization — the engine's own
-    periodogram seeds the GP where the reference relies on init_period."""
+    """Quick direct-sum GLS scan (Zechmeister & Kürster 2009 fit-mean finish,
+    spectral.gls.gls_power_np) for GP initialization — the engine's own
+    periodogram seeds the GP where the reference relies on init_period.
+
+    One frequency at a time keeps memory O(N): the celerite path takes
+    10⁵-sample series, where one n_grid×N trig matrix would be 160 MB.
+    Non-finite powers are skipped (a bare argmax would return a NaN's
+    index)."""
+    from periodicity_spark.spectral.gls import gls_power_np
+
     baseline = t.max() - t.min()
     dtm = float(np.median(np.diff(np.sort(t))))
     fmin, fmax = 2.0 / baseline, 0.5 / dtm
@@ -84,21 +91,14 @@ def gls_best_period(t: np.ndarray, y: np.ndarray, n_grid: int = 200) -> float:
     for f in freqs:
         th = 2 * np.pi * f * t
         s, c = np.sin(th), np.cos(th)
-        S, C = np.dot(w, s), np.dot(w, c)
-        S2, C2 = np.dot(w, 2 * s * c), np.dot(w, 1 - 2 * s * s)
-        Sh, Ch = np.dot(w * yc, s), np.dot(w * yc, c)
-        t2w = (S2 - 2 * S * C) / (C2 - (C * C - S * S))
-        C2w = 1 / np.sqrt(1 + t2w * t2w)
-        S2w = t2w * C2w
-        Cw = np.sqrt(0.5) * np.sqrt(1 + C2w)
-        Sw = np.sqrt(0.5) * np.sign(S2w) * np.sqrt(1 - C2w)
-        YC = Ch * Cw + Sh * Sw
-        YS = Sh * Cw - Ch * Sw
-        CC = 0.5 * (1 + C2 * C2w + S2 * S2w) - (C * Cw + S * Sw) ** 2
-        SS = 0.5 * (1 - C2 * C2w - S2 * S2w) - (S * Cw - C * Sw) ** 2
-        power = (YC * YC / CC + YS * YS / SS) / yy
-        if np.isfinite(power) and power > best_p:
-            best_p, best_f = power, f
+        with np.errstate(divide="ignore", invalid="ignore"):
+            p = gls_power_np(
+                np.dot(w, s), np.dot(w, c),
+                np.dot(w, 2 * s * c), np.dot(w, 1 - 2 * s * s),
+                np.dot(w * yc, s), np.dot(w * yc, c),
+            ) / yy
+        if np.isfinite(p) and p > best_p:
+            best_p, best_f = p, f
     return 1.0 / best_f
 
 

@@ -1107,10 +1107,9 @@ def ann_topk_auto(
     brute_force_threshold: int = 100_000,
     **lsh_kwargs,
 ) -> DataFrame:
-    """Strategy pick for cosine top-k (the ANN analog of ``gls_auto``,
-    spectral/fast.py): small corpus → exact brute-force; large corpus →
-    the sign-hash multi-table LSH. → (qid, vec_id, cosine, rank), the
-    shared contract of every path here.
+    """Strategy pick for cosine top-k: small corpus → exact brute-force;
+    large corpus → the sign-hash multi-table LSH. → (qid, vec_id, cosine,
+    rank), the shared contract of every path here.
 
     Routing (measured, round-7 sf1 soak at 500k vectors): brute-force is
     one corpus scan with the probe set broadcast — exact, and under ~10⁵

@@ -251,8 +251,8 @@ def grouped_apply(
     groupBy("series_id").applyInPandas pays ~1 ms of constant cost per
     series — measured 10.6 s for 7.5k series at sf0.1 where the kernels
     themselves were <2 s. Bucketing amortizes it ~100×. A single giant
-    series still lands in one bucket — no worse than per-series grouping;
-    shard such operators explicitly (see gls grid_chunks).
+    series still lands in one bucket, in one Python task — no worse than
+    per-series grouping.
 
     Each Python task also pays a fixed cost before any kernel runs: the
     worker's ``importlib.invalidate_caches()`` re-reads every zip archive

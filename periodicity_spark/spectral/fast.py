@@ -1,14 +1,12 @@
 """Per-series O(N log N) GLS path (Press & Rybicki 1989 FFT extirpolation),
-plus the engine-level strategy pick between it and the distributed exact
-path — mirroring the reference's own algorithmic choice (its _trig_sum,
+the reference's own algorithm for dense grids (its _trig_sum,
 spectral.py:11-40, implements the same published algorithm; this is an
 independent implementation from the paper / Numerical Recipes description).
 
-When to use which (gls_auto): the distributed path costs O(N·F) work spread
-over the cluster with everything in codegen; the fast path costs
-O((N+F)·log) per series but runs in Python per series. Dense grids on long
-single series → fast path; many short series (the 100 TB sharded case) →
-distributed path.
+One plan: ``gls_periodogram_fast`` is one ``grouped_apply`` stage, each
+series extirpolated whole in one Python task. It costs O((N+F)·log) per
+series against the distributed exact path's O(N·F) codegen work
+(spectral.gls); the caller picks the algorithm, the engine does not.
 """
 
 from __future__ import annotations
@@ -17,8 +15,8 @@ import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from periodicity_spark.session import ensure_worker_imports, prune_zip_importers
-from periodicity_spark.spectral.gls import gls_periodogram, gls_power_np
+from periodicity_spark.session import grouped_apply, prune_zip_importers
+from periodicity_spark.spectral.gls import gls_power_np
 
 
 def _spread_extirpolate(t: np.ndarray, w: np.ndarray, nfft: int, df: float, fmin: float):
@@ -88,29 +86,17 @@ def gls_power_fast(t, y, fmin, df, nf, fit_mean=True, err=None):
 
 def gls_periodogram_fast(
     ts: DataFrame, fmin: float, df: float, nf: int, fit_mean: bool = True,
-    min_count: int = 3, grid_chunks: int = 1,
+    min_count: int = 3,
 ) -> DataFrame:
     """Per-series Arrow UDF around gls_power_fast → pg rows. Series with
     fewer than ``min_count`` samples are dropped (same contract as
-    gls_periodogram's min_count).
-
-    ``grid_chunks`` > 1 shards the frequency grid: the samples are
-    replicated to (series, chunk) groups and each task extirpolates only its
-    sub-grid, so ONE giant series parallelizes across the cluster instead of
-    serializing in a single Python task. The trade is grid_chunks× shuffle
-    volume of the sample set for grid_chunks× wall-clock parallelism — the
-    right trade when the series is the long axis (the single-10⁸-point-series
-    case PLANS.md flags). Chunk trig sums are exact per sub-grid; only the
-    extirpolation mesh differs, so sharded output matches unsharded to the
-    extirpolation tolerance (~1e-5)."""
-    ensure_worker_imports(ts.sparkSession)
+    gls_periodogram's min_count)."""
     fm, d, n, fmean = float(fmin), float(df), int(nf), fit_mean
     mc = max(int(min_count), 3)
-    nc = max(int(grid_chunks), 1)
-    csize = -(-n // nc)  # ceil
 
     def _per_group(pdf):
         prune_zip_importers()
+        import numpy as np
         import pandas as pd
         from periodicity_spark.spectral.fast import gls_power_fast as gpf
 
@@ -119,86 +105,16 @@ def gls_periodogram_fast(
         y = pdf["value"].to_numpy(float)
         if len(y) < mc:
             return pd.DataFrame(columns=["series_id", "frequency", "power"])
-        c = int(pdf["_chunk"].iloc[0]) if "_chunk" in pdf else 0
-        j0 = c * csize
-        nf_c = min(csize, n - j0)
-        power = gpf(t, y, fm + d * j0, d, nf_c, fit_mean=fmean)
-        import numpy as np
-
         return pd.DataFrame(
             {
                 "series_id": pdf["series_id"].iloc[0],
-                "frequency": fm + d * (j0 + np.arange(nf_c)),
-                "power": power,
+                "frequency": fm + d * np.arange(n),
+                "power": gpf(t, y, fm, d, n, fit_mean=fmean),
             }
         )
 
-    src = ts.filter(F.col("value").isNotNull())
-    if nc == 1:
-        # bucketed grouping amortizes per-series Arrow overhead over many
-        # small series; the giant-series case is what grid_chunks is for
-        from periodicity_spark.session import grouped_apply
-
-        return grouped_apply(
-            src, _per_group, "series_id string, frequency double, power double"
-        )
-    chunks = ts.sparkSession.range(nc).select(F.col("id").cast("int").alias("_chunk"))
-    return (
-        src.crossJoin(F.broadcast(chunks))
-        .groupBy("series_id", "_chunk")
-        .applyInPandas(_per_group, "series_id string, frequency double, power double")
+    return grouped_apply(
+        ts.filter(F.col("value").isNotNull()),
+        _per_group,
+        "series_id string, frequency double, power double",
     )
-
-
-def gls_auto(
-    ts: DataFrame,
-    fmin: float,
-    df: float,
-    nf: int,
-    fit_mean: bool = True,
-    avg_points_threshold: int = 4096,
-    target_tasks: int | None = None,
-) -> DataFrame:
-    """Strategy pick (the engine-level analog of the reference's conv-vs-FFT
-    choice, timefrequency.py:212-218): long series × dense grid → per-series
-    O(N log N) UDF; many short series → distributed O(N·F) codegen path.
-    On the fast path, when there are fewer series than would fill the
-    cluster, the frequency grid is sharded (grid_chunks) so even a single
-    series fans out across tasks.
-
-    ``target_tasks`` pins the fan-out explicitly; the default (None) derives
-    it from the session's defaultParallelism, which is environment-dependent
-    BY DESIGN — chunking changes the task layout only, never the values
-    (each grid chunk is an independent exact computation), so the same query
-    returns identical numbers on a laptop and a 1000-executor cluster. Pin
-    it when reproducible STAGE GRAPHS (e.g. plan-diffing across machines)
-    matter."""
-    stats = ts.groupBy("series_id").agg(F.count("value").alias("n")).agg(
-        F.avg("n").alias("avg_n"),
-        F.max("n").alias("max_n"),
-        F.count(F.lit(1)).alias("n_series"),
-    ).collect()[0]
-    avg_n = stats["avg_n"] or 0
-    max_n = stats["max_n"] or 0
-    n_series = stats["n_series"] or 0
-    if avg_n * nf > avg_points_threshold * 64 and avg_n > avg_points_threshold:
-        if target_tasks is None:
-            target_tasks = ts.sparkSession.sparkContext.defaultParallelism * 2
-        want = -(-target_tasks // max(n_series, 1))  # ceil
-        chunks = max(1, min(want, 32, nf // 256))
-        return gls_periodogram_fast(ts, fmin, df, nf, fit_mean, grid_chunks=chunks)
-    from periodicity_spark.spectral.gls import gls_arrow, uniform_freq_grid
-
-    grid = uniform_freq_grid(ts.sparkSession, fmin, df, nf)
-    # many-short-series regime on a global grid: the per-series Arrow
-    # kernel is the exact strategy of choice (differential ≤5e-11 vs the
-    # crossJoin aggregate, measured ~40% faster at sf0.1 — see
-    # gls_arrow's docstring). Its per-task memory is TWO F×N float64 trig
-    # matrices for the WORST series, so the route is gated on max_n (not
-    # avg_n — one giant series hiding among short ones must not OOM a
-    # worker) × nf staying under ~16M cells (~256 MB); beyond that the
-    # streaming crossJoin aggregate computes the same numbers in bounded
-    # memory
-    if max_n * nf <= 16_000_000:
-        return gls_arrow(ts, grid, fit_mean=fit_mean)
-    return gls_periodogram(ts, freq_grid=grid, fit_mean=fit_mean)

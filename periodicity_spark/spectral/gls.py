@@ -5,21 +5,26 @@ Zechmeister & Kürster 2009): heteroscedastic weights, optional floating mean,
 PSD or normalized output, default grid df = 1/(n·baseline), fmin = df/2,
 fmax = 1/(2·median_dt) (reference spectral.py:88-97).
 
-Two execution paths (engine-level strategy, like the reference's own
-conv-vs-FFT pick in WPS):
+One plan per algorithm; the caller picks the algorithm:
 
-(a) **Distributed exact O(N·F)** — the default. The (series, frequency) grid
-    joins the samples on series_id and one shuffle aggregates the six
+(a) ``gls_periodogram`` — distributed exact O(N·F). The (series, frequency)
+    grid joins the samples on series_id and one shuffle aggregates the six
     Zechmeister-Kürster trig sums; the power finish is pure column math.
-    Everything stays in whole-stage codegen; scales over N×F×#series, which
-    is what matters at 100 TB. The grid side is broadcast when small.
+    Everything stays in whole-stage codegen and scales over N×F×#series.
+    The per-series stats side is broadcast.
 
-(b) **Per-series O(N log N)** — Press & Rybicki (1989) FFT extirpolation
-    (reference spectral.py:11-40) inside an Arrow-batched applyInPandas,
-    parallel across series. Preferable when single series are huge and the
-    grid is dense.
+(a') ``gls_arrow`` — the same exact sums per series in numpy, inside one
+    ``grouped_apply`` stage, over a global grid.
 
-Both return the pg schema (series_id, frequency, power).
+(b) ``spectral.fast.gls_periodogram_fast`` — per-series O(N log N) Press &
+    Rybicki (1989) FFT extirpolation (reference spectral.py:11-40), also
+    one ``grouped_apply`` stage.
+
+The power finish exists once per runtime: ``gls_power_sql`` for Spark
+plans (this module and ``streaming.gls``), ``gls_power_np`` for the numpy
+kernels (gls_arrow, gls_periodogram_fast, the GP period seed).
+
+All three return the pg schema (series_id, frequency, power).
 """
 
 from __future__ import annotations
@@ -87,10 +92,9 @@ def _recode_tiny(df: DataFrame, order_col: str, code_col: str) -> DataFrame:
     """Dense integer recode of a TINY side: row_number over a GLOBAL
     (partition-less) window — deterministic and collision-free, unlike a
     64-bit hash. The single-partition funnel this implies is safe ONLY for
-    sides already assumed broadcast-small (one row per series / per grid
-    point); every caller gates on the same tiny-side assumption as its
-    broadcast hint and exposes an escape hatch (broadcast_stats=None/False)
-    that skips the recode entirely. Do not point this at a fact table."""
+    sides that are broadcast anyway (one row per series / per grid point);
+    every caller broadcasts the recoded side. Do not point this at a fact
+    table."""
     from pyspark.sql import Window
 
     return df.withColumn(code_col, F.row_number().over(Window.orderBy(order_col)))
@@ -111,7 +115,6 @@ def gls_periodogram(
     fit_mean: bool = True,
     err_col: str | None = None,
     min_count: int | None = None,
-    broadcast_stats: bool | None = True,
 ) -> DataFrame:
     """Distributed exact GLS (path a).
 
@@ -126,12 +129,6 @@ def gls_periodogram(
     mean-subtracted values), and the main grid-join aggregation. The stats
     side is broadcast; the only big shuffle is the (series, frequency)
     aggregate of the six trig sums.
-
-    broadcast_stats: the per-series stats side is ONE ROW PER SERIES — tiny
-    for any realistic series count, so the default forces the broadcast
-    hint. At extreme cardinality (~10⁸ series ≈ 4 GB of stats) pass None to
-    drop the hint and let AQE pick broadcast-vs-shuffle from the measured
-    size at runtime, or False to force the shuffle join.
     """
     # The N×F grid expansion, 2·N·F transcendentals and the partial
     # aggregation all run INSIDE the scan tasks (everything below the first
@@ -182,78 +179,55 @@ def gls_periodogram(
     # sf0.1): the hot (series, frequency) hash-aggregate probes ~N·F rows,
     # and hashing/comparing a long beats a string series_id. The code is a
     # row_number over the stats side — deterministic and collision-free by
-    # construction (unlike a 64-bit hash), and it rides exactly the same
-    # "stats side is tiny" assumption as the broadcast hint, so it is only
-    # used when broadcast_stats is truthy; the extreme-cardinality escape
-    # paths (None/False) keep plain string keys and skip the single-
-    # partition recode window.
-    int_keys = bool(broadcast_stats)
-    if int_keys:
-        pre = _recode_tiny(pre, "series_id", "_code")
-        key = "_code"
-        # The one-row-per-series stats table feeds TWO broadcast subtrees
-        # (the sample join and the consts power-finish join). Without
-        # sharing, each broadcast re-runs the full stats aggregate from
-        # its own fact-table scan — 3 fact scans / 11 exchanges in
-        # gls_power's AQE-final executed plan at sf0.01, and at 100 TB a
-        # redundant fact scan is the whole bill (2 scans / ~7 exchanges
-        # with the cache). A NON-eager persist (not localCheckpoint) is
-        # the right sharing primitive here: the two broadcast jobs race,
-        # the BlockManager's per-block lock makes one compute while the
-        # other reads the cached rows, and no serial up-front job is
-        # added (an eager checkpoint measured +1.2 s at sf0.1; carrying
-        # the constants through the hot N×F aggregate as first()s
-        # measured +4.7 s — per-row aggregate-buffer updates scale with
-        # N×F, a redundant broadcast subtree only with N). Rides the same
-        # tiny-side contract as the broadcast hint; the cache is KB-sized
-        # (one short row per series) and LRU-evicted. MEMORY_ONLY keeps the
-        # residue RAM-only (no disk blocks accumulate across many distinct
-        # GLS plans in a long-lived session); callers that overwrite the
-        # SOURCE FILES between identical-plan calls must clearCache() —
-        # Spark's CacheManager matches on the logical plan, not file mtime.
-        from pyspark import StorageLevel
+    # construction (unlike a 64-bit hash) — and rides the same "stats side
+    # is tiny" assumption as the broadcast hints below.
+    pre = _recode_tiny(pre, "series_id", "_code")
+    # The one-row-per-series stats table feeds TWO broadcast subtrees
+    # (the sample join and the consts power-finish join). Without
+    # sharing, each broadcast re-runs the full stats aggregate from
+    # its own fact-table scan — 3 fact scans / 11 exchanges in
+    # gls_power's AQE-final executed plan at sf0.01, and at 100 TB a
+    # redundant fact scan is the whole bill (2 scans / ~7 exchanges
+    # with the cache). A NON-eager persist (not localCheckpoint) is
+    # the right sharing primitive here: the two broadcast jobs race,
+    # the BlockManager's per-block lock makes one compute while the
+    # other reads the cached rows, and no serial up-front job is
+    # added (an eager checkpoint measured +1.2 s at sf0.1; carrying
+    # the constants through the hot N×F aggregate as first()s
+    # measured +4.7 s — per-row aggregate-buffer updates scale with
+    # N×F, a redundant broadcast subtree only with N). The cache is
+    # KB-sized (one short row per series) and LRU-evicted. MEMORY_ONLY
+    # keeps the residue RAM-only (no disk blocks accumulate across many
+    # distinct GLS plans in a long-lived session); callers that overwrite
+    # the SOURCE FILES between identical-plan calls must clearCache() —
+    # Spark's CacheManager matches on the logical plan, not file mtime.
+    from pyspark import StorageLevel
 
-        pre = pre.persist(StorageLevel.MEMORY_ONLY)
-    else:
-        key = "series_id"
-    consts_cols = [key, "wsum", "YY"] + (["series_id"] if int_keys else [])
-    consts = pre.select(*consts_cols)
-
-    def _hint(df):
-        return F.broadcast(df) if broadcast_stats else df
-
-    if broadcast_stats is False:
-        # force the shuffle join even if AQE would broadcast
-        pre = pre.hint("shuffle_hash")
-        consts = consts.hint("shuffle_hash")
+    pre = pre.persist(StorageLevel.MEMORY_ONLY)
+    consts = pre.select("_code", "wsum", "YY", "series_id")
 
     if freq_grid is None:
         freq_grid = default_freq_grid(ts, n=n)
-    per_series_grid = "series_id" in freq_grid.columns
+    joined = base.join(F.broadcast(pre), "series_id")
     # Global grids also swap the double frequency key for the grid row index
     # (the frequency VALUE maps back from the tiny indexed grid afterwards,
-    # so output doubles are bit-identical to the string-keyed plan).
-    index_grid = int_keys and not per_series_grid
+    # so output doubles are bit-identical to a frequency-keyed plan).
+    index_grid = "series_id" not in freq_grid.columns
     if index_grid:
         freq_grid = _recode_tiny(freq_grid, "frequency", "_k")
-    if per_series_grid:
-        joined = base.join(_hint(pre), "series_id").join(
-            freq_grid, "series_id"
-        )
+        joined = joined.crossJoin(F.broadcast(freq_grid))
+        group_keys = ["_code", "_k"]
     else:
-        joined = base.join(_hint(pre), "series_id").crossJoin(
-            F.broadcast(freq_grid)
-        )
-
-    group_keys = [key, "_k"] if index_grid else [key, "frequency"]
+        joined = joined.join(freq_grid, "series_id")
+        group_keys = ["_code", "frequency"]
 
     # Project sinθ/cosθ once, derive the double-angle terms algebraically
     # (sin2θ = 2sc, cos2θ = 1−2s²) — halves the transcendental work, which
     # dominates the crossJoin aggregate at scale.
     #
-    # The arithmetic here and in the power finish below is written as SQL
-    # STRINGS parsed JVM-side, not as Column objects: building the same
-    # trees through py4j costs one driver round-trip per node (~0.3-1 ms
+    # The arithmetic here and in the power finish (gls_power_sql) is written
+    # as SQL STRINGS parsed JVM-side, not as Column objects: building the
+    # same trees through py4j costs one driver round-trip per node (~0.3-1 ms
     # each, ~1 800 per periodogram plan — the r10 simhash lesson, guide
     # §5). The strings are structured to parse to EXACTLY the trees the
     # former Column code built; tests/test_spectral_extras.py pins the
@@ -279,17 +253,29 @@ def gls_periodogram(
         F.expr("sum(_w * _y * _c) AS Ch"),
     )
 
-    sums = sums.join(_hint(consts), key)
+    sums = sums.join(F.broadcast(consts), "_code")
     if index_grid:
         sums = sums.join(
             F.broadcast(freq_grid.select("_k", "frequency")), "_k"
         )
 
-    # Power finish — SQL-string transliteration of reference
-    # spectral.py:113-132 (parsed JVM-side; every substitution is
-    # parenthesized so the parse tree matches the former Column build
-    # node-for-node — the repeated subterms below textually duplicate
-    # exactly the way reused Column objects duplicated their subtrees).
+    return sums.selectExpr(
+        "series_id", "frequency", f"{gls_power_sql(fit_mean, psd)} AS power"
+    )
+
+
+def gls_power_sql(fit_mean: bool = True, psd: bool = False) -> str:
+    """Zechmeister-Kürster power finish as ONE Spark SQL expression over the
+    columns S, C, S2, C2 (weighted Σsin, Σcos, Σsin2ωt, Σcos2ωt), Sh, Ch
+    (the same over the centred values), YY (weighted variance) and, for
+    ``psd``, wsum — a transliteration of reference spectral.py:113-132.
+    The finish of every Spark GLS plan: the batch ``gls_periodogram`` and
+    the streaming ``streaming.gls.gls_power_from_sums``.
+
+    Every substitution is parenthesized so the parse tree matches the
+    former Column build node-for-node — the repeated subterms textually
+    duplicate exactly the way reused Column objects duplicated their
+    subtrees (tests/test_spectral_extras.py pins the optimized plan)."""
     if fit_mean:
         tan2wt = "try_divide(S2 - (S * 2) * C, C2 - (C * C - S * S))"
     else:
@@ -313,10 +299,8 @@ def gls_periodogram(
     # every non-degenerate row try_divide is bit-identical to `/`.
     power = f"(try_divide({YC} * {YC}, {CC}) + try_divide({YS} * {YS}, {SS}))"
     if psd:
-        power = f"({power} * (wsum * 0.5D))"
-    else:
-        power = f"try_divide({power}, YY)"
-    return sums.selectExpr("series_id", "frequency", f"{power} AS power")
+        return f"({power} * (wsum * 0.5D))"
+    return f"try_divide({power}, YY)"
 
 
 def gls_power_np(S, C, S2, C2, Sh, Ch, fit_mean=True):
@@ -325,8 +309,8 @@ def gls_power_np(S, C, S2, C2, Sh, Ch, fit_mean=True):
     S2, C2 = Σw·sin 2ωt, Σw·cos 2ωt; Sh, Ch = Σw·Y·sin, Σw·Y·cos of the
     centred values. → YC²/CC + YS²/SS, before the 1/YY (or PSD)
     normalization. S and C are unused when not ``fit_mean``. The finish of
-    both numpy paths: gls_arrow's exact sums and gls_power_fast's
-    extirpolated ones."""
+    every numpy path: gls_arrow's exact sums, gls_power_fast's extirpolated
+    ones and the GP period seed (gp.kernels.gls_best_period)."""
     import numpy as np
 
     if fit_mean:
@@ -452,9 +436,17 @@ def gls_arrow(
 class GLS:
     """Configured-callable facade matching the reference API shape
     (reference spectral.py:53-73): ``GLS(fmin, fmax, n, psd)(ts)`` → pg DF.
-    No hidden mutable state — results are returned, not cached."""
+    No hidden mutable state — results are returned, not cached.
+
+    ``fmin`` and ``fmax`` come together (an explicit global grid) or not at
+    all (the per-series reference grid); a lone bound or fmin > fmax raises
+    ``ValueError``."""
 
     def __init__(self, fmin: float | None = None, fmax: float | None = None, n: float = 5.0, psd: bool = False):
+        if (fmin is None) != (fmax is None):
+            raise ValueError("GLS needs both fmin and fmax, or neither")
+        if fmin is not None and fmin > fmax:
+            raise ValueError(f"GLS fmin={fmin} exceeds fmax={fmax}")
         self.fmin = fmin
         self.fmax = fmax
         self.n = n
@@ -462,7 +454,7 @@ class GLS:
 
     def __call__(self, ts: DataFrame, err_col: str | None = None, fit_mean: bool = True) -> DataFrame:
         grid = None
-        if self.fmin is not None and self.fmax is not None:
+        if self.fmin is not None:
             # explicit global bounds, reference-style step from per-series
             # baseline is replaced by an explicit arange over [fmin, fmax]
             spark = ts.sparkSession

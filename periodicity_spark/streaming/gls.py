@@ -7,9 +7,9 @@ micro-batch folds its events into per-(series, frequency) running trig
 sums; the power formula is a stateless finish over the drained aggregate.
 
 Two-pass structure of the batch operator (stats pass → centered trig pass,
-spectral/gls.py:117-199) cannot stream — joining two streaming aggregates
-is unsupported, and the mean isn't known mid-stream. Instead the streaming
-aggregate keeps RAW (uncentered) moments and the finish centers
+spectral.gls.gls_periodogram) cannot stream — joining two streaming
+aggregates is unsupported, and the mean isn't known mid-stream. Instead the
+streaming aggregate keeps RAW (uncentered) moments and the finish centers
 algebraically:
 
     S  = Σsinθ/n                 Sh = (Σy·sinθ − ȳ·Σsinθ)/n
@@ -85,39 +85,28 @@ def gls_power_from_sums(
     sums: DataFrame, min_count: int | None = None, fit_mean: bool = True
 ) -> DataFrame:
     """Stateless finish over the drained raw-moment aggregate →
-    (series_id, frequency, power). Mirrors the batch power formula
-    (spectral/gls.py:213-243, itself a transliteration of reference
-    spectral.py:113-132) applied to the algebraically centered sums; the
-    try_divide convention (degenerate series → NULL power) is identical."""
+    (series_id, frequency, power): the algebraically centred sums (module
+    docstring) under the batch operator's own finish,
+    ``spectral.gls.gls_power_sql`` — so the try_divide convention
+    (degenerate series → NULL power) is identical by construction."""
+    from periodicity_spark.spectral.gls import gls_power_sql
+
     if min_count is not None:
         sums = sums.filter(F.col("n") >= int(min_count))
-    n = F.col("n").cast("double")
-    ybar = F.col("sy") / n
-    S = F.col("s1") / n
-    C = F.col("c1") / n
-    S2 = F.col("s2") / n
-    C2 = F.col("c2") / n
-    Sh = (F.col("sh") - ybar * F.col("s1")) / n
-    Ch = (F.col("ch") - ybar * F.col("c1")) / n
-    YY = F.col("syy") / n - ybar * ybar
-
-    if fit_mean:
-        tan2wt = F.try_divide(S2 - 2 * S * C, C2 - (C * C - S * S))
-    else:
-        tan2wt = F.try_divide(S2, C2)
-    norm = F.sqrt(1 + tan2wt * tan2wt)
-    S2w = tan2wt / norm
-    C2w = 1 / norm
-    Cw = F.sqrt(F.lit(0.5)) * F.sqrt(1 + C2w)
-    Sw = F.sqrt(F.lit(0.5)) * F.signum(S2w) * F.sqrt(1 - C2w)
-    YC = Ch * Cw + Sh * Sw
-    YS = Sh * Cw - Ch * Sw
-    CC = 0.5 * (1 + C2 * C2w + S2 * S2w)
-    SS = 0.5 * (1 - C2 * C2w - S2 * S2w)
-    if fit_mean:
-        CC = CC - (C * Cw + S * Sw) ** 2
-        SS = SS - (S * Cw - C * Sw) ** 2
-    power = F.try_divide(
-        F.try_divide(YC * YC, CC) + F.try_divide(YS * YS, SS), YY
+    return (
+        sums.selectExpr("*", "sy / n AS ybar")
+        .selectExpr(
+            "series_id",
+            "frequency",
+            "s1 / n AS S",
+            "c1 / n AS C",
+            "s2 / n AS S2",
+            "c2 / n AS C2",
+            "(sh - ybar * s1) / n AS Sh",
+            "(ch - ybar * c1) / n AS Ch",
+            "syy / n - ybar * ybar AS YY",
+        )
+        .selectExpr(
+            "series_id", "frequency", f"{gls_power_sql(fit_mean)} AS power"
+        )
     )
-    return sums.select("series_id", "frequency", power.alias("power"))

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from periodicity_spark.decomposition.emd import ceemdan_postprocess, emd_modes
 from periodicity_spark.operators.clean import mirror_fill
-from periodicity_spark.spectral.fast import gls_auto, gls_periodogram_fast
+from periodicity_spark.spectral.fast import gls_periodogram_fast
 from periodicity_spark.spectral.gls import gls_periodogram, uniform_freq_grid
 from periodicity_spark.timefrequency.hht import hht, marginal_spectrum
 from periodicity_spark.timefrequency.wps import reconstruct, wps
@@ -36,42 +36,6 @@ def test_fast_gls_matches_distributed(spark):
     )
     assert np.abs(fast - exact).max() < 1e-3
     assert np.argmax(fast) == np.argmax(exact)
-    # strategy pick runs end-to-end either way
-    assert gls_auto(ts, fmin, df_, nf).count() == nf
-
-
-def test_fast_gls_grid_sharding(spark):
-    """grid_chunks shards ONE series across tasks: output identical (to the
-    extirpolation mesh tolerance) and the plan fans out to >1 group."""
-    rng = np.random.default_rng(9)
-    t = np.sort(rng.uniform(0, 200, 3000))
-    y = np.sin(2 * np.pi * t / 11.0) + 0.2 * rng.standard_normal(3000)
-    ts = _df(spark, t, y)
-    fmin, df_, nf = 0.01, 0.001, 512
-    un = (
-        gls_periodogram_fast(ts, fmin, df_, nf)
-        .orderBy("frequency").toPandas()
-    )
-    sh = (
-        gls_periodogram_fast(ts, fmin, df_, nf, grid_chunks=4)
-        .orderBy("frequency").toPandas()
-    )
-    assert len(sh) == len(un) == nf
-    np.testing.assert_allclose(
-        sh["frequency"].to_numpy(), un["frequency"].to_numpy(), atol=1e-12
-    )
-    np.testing.assert_allclose(
-        sh["power"].to_numpy(), un["power"].to_numpy(), atol=3e-4
-    )
-    # a single series really fans out: 4 (series, chunk) groups
-    groups = (
-        ts.crossJoin(F.broadcast(spark.range(4).select(F.col("id").alias("_chunk"))))
-        .groupBy("series_id", "_chunk").count().count()
-    )
-    assert groups == 4
-    # gls_auto picks a sharded fast path for one long series on a dense grid
-    auto = gls_auto(ts, fmin, df_, nf, avg_points_threshold=1024)
-    assert auto.count() == nf
 
 
 def test_fast_gls_matches_duckdb_oracle(spark):

@@ -154,6 +154,76 @@ def test_gp_mcmc_period_routes_celerite(spark, qp_signal):
     assert row["period_median"] == pytest.approx(10.0, rel=0.3)
 
 
+def _scalar_gls_scan(t, y, n_grid=200):
+    """Scalar Zechmeister-Kürster scan, written out term by term: the
+    reference gls_best_period must reproduce. → (freqs, powers, index of
+    the first highest finite power)."""
+    baseline = t.max() - t.min()
+    dtm = float(np.median(np.diff(np.sort(t))))
+    freqs = np.geomspace(2.0 / baseline, 0.5 / dtm, n_grid)
+    w = np.ones(len(y)) / len(y)
+    yc = y - np.dot(w, y)
+    yy = np.dot(w, yc**2)
+    powers = []
+    with np.errstate(divide="ignore", invalid="ignore"):
+        for f in freqs:
+            th = 2 * np.pi * f * t
+            s, c = np.sin(th), np.cos(th)
+            S, C = np.dot(w, s), np.dot(w, c)
+            S2, C2 = np.dot(w, 2 * s * c), np.dot(w, 1 - 2 * s * s)
+            Sh, Ch = np.dot(w * yc, s), np.dot(w * yc, c)
+            t2w = (S2 - 2 * S * C) / (C2 - (C * C - S * S))
+            C2w = 1 / np.sqrt(1 + t2w * t2w)
+            S2w = t2w * C2w
+            Cw = np.sqrt(0.5) * np.sqrt(1 + C2w)
+            Sw = np.sqrt(0.5) * np.sign(S2w) * np.sqrt(1 - C2w)
+            YC = Ch * Cw + Sh * Sw
+            YS = Sh * Cw - Ch * Sw
+            CC = 0.5 * (1 + C2 * C2w + S2 * S2w) - (C * Cw + S * Sw) ** 2
+            SS = 0.5 * (1 - C2 * C2w - S2 * S2w) - (S * Cw - C * Sw) ** 2
+            powers.append((YC * YC / CC + YS * YS / SS) / yy)
+    best, best_p = 0, -np.inf
+    for i, p in enumerate(powers):
+        if np.isfinite(p) and p > best_p:
+            best_p, best = p, i
+    return freqs, np.asarray(powers), best
+
+
+def test_gls_best_period_equals_scalar_scan(spark):
+    """The GP period seed equals the scalar scan exactly, on every sf0.001
+    events series of >= 12 points and on a series whose power is NaN at
+    the top grid frequency (paired even-integer times, odd count: half the
+    gaps are 0, so the median gap puts fmax where every sample sits at
+    phase 0) — there a bare argmax would return the NaN's index."""
+    from pyspark.sql import functions as F
+
+    from periodicity_spark.gp.kernels import gls_best_period
+    from periodicity_spark.sources.ingest import ts_from_events
+
+    pdf = (
+        ts_from_events(spark, "/root/testdata/sf0.001")
+        .filter(F.col("value").isNotNull())
+        .toPandas()
+    )
+    n_checked = 0
+    for _, g in pdf.groupby("series_id"):
+        g = g.sort_values("time")
+        t = g["time"].to_numpy(np.float64)
+        y = g["value"].to_numpy(np.float64)
+        if len(t) < 12:
+            continue
+        freqs, _, best = _scalar_gls_scan(t, y)
+        assert gls_best_period(t, y) == 1.0 / freqs[best], g["series_id"].iloc[0]
+        n_checked += 1
+    assert n_checked > 10
+
+    t = np.repeat(np.arange(0.0, 20.0, 2.0), 2)[:-1]
+    y = np.sin(2 * np.pi * t / 5.3) + 0.1 * np.cos(np.arange(len(t)))
+    freqs, powers, best = _scalar_gls_scan(t, y)
+    assert np.argmax(powers) != best  # the NaN the seed must skip
+    assert gls_best_period(t, y) == 1.0 / freqs[best]
+
+
 def test_celerite_nll_batch_1e5_smoke():
     """O(N) per step at scale: one batched half-ensemble likelihood step at
     N=10⁵ completes in seconds (measured ~3 s for B=8). The dense O(N³)

@@ -84,6 +84,17 @@ def test_gls_psd_and_window(spark):
     assert win.count() == len(pg)
 
 
+def test_gls_rejects_lone_or_inverted_bounds():
+    """An explicit grid needs both bounds in order: a lone fmin or fmax
+    would silently fall back to the per-series default grid, and
+    fmin > fmax would build an empty one."""
+    for kw in ({"fmin": 0.1}, {"fmax": 0.4}, {"fmin": 0.5, "fmax": 0.1}):
+        with pytest.raises(ValueError):
+            GLS(**kw)
+    GLS(fmin=0.1, fmax=0.1)
+    GLS()
+
+
 def test_gls_degenerate_series_yield_null_not_crash(spark):
     """A constant-value series has YY = 0; under Spark 4 ANSI mode a plain
     division would raise DIVIDE_BY_ZERO at collect. The reference's numpy

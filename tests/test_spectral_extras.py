@@ -252,7 +252,7 @@ def test_gls_arrow_matches_crossjoin_path(spark):
 def test_gls_strategies_agree_on_dirty_data(spark):
     """NaN values and NULL/NaN errors are missing data in BOTH exact GLS
     strategies — the same series must yield the same powers (and the same
-    min_count decision) whichever strategy gls_auto picks."""
+    min_count decision) whichever exact strategy a query runs."""
     import numpy as _np
 
     from periodicity_spark.spectral.gls import gls_arrow
@@ -292,13 +292,16 @@ def test_gls_sql_string_build_plan_identical_to_column_reference(spark):
     """The r10 driver-overhead rewrite builds gls_periodogram's projection,
     six-sum aggregate and power finish as SQL STRINGS parsed JVM-side
     (~1 800 → ~540 py4j round-trips, 0.90 → 0.34 s per warm build). This
-    differential re-implements the FORMER Column-object finish verbatim on
-    the engine's own `sums` frame and asserts the OPTIMIZED plans are
-    byte-identical modulo expression ids, for every (psd, fit_mean) branch
-    — plan equality implies result equality, to the bit."""
+    differential re-implements the FORMER Column-object build verbatim —
+    with the default plan's int-key recodes, persisted stats side and
+    broadcast hints — and asserts the OPTIMIZED plans are byte-identical
+    modulo expression ids, for every (psd, fit_mean) branch — plan
+    equality implies result equality, to the bit."""
     import re
 
     import numpy as np
+    from pyspark import StorageLevel
+    from pyspark.sql import Window
     from pyspark.sql import functions as F
 
     from periodicity_spark.spectral.gls import (
@@ -317,7 +320,8 @@ def test_gls_sql_string_build_plan_identical_to_column_reference(spark):
     grid = uniform_freq_grid(spark, 0.05, 0.015625, 16)
 
     def column_reference(ts, freq_grid, psd, fit_mean):
-        """Verbatim pre-rewrite formulation: Column objects end-to-end."""
+        """Verbatim pre-rewrite formulation: Column objects end-to-end.
+        → (power frame, its persisted stats side)."""
         ts = ts.filter(F.col("value").isNotNull() & ~F.isnan("value"))
         werr = F.lit(1.0)
         base = ts.withColumn("werr", werr)
@@ -334,24 +338,29 @@ def test_gls_sql_string_build_plan_identical_to_column_reference(spark):
             ybar.alias("ybar"),
             (F.col("_swyy") / F.col("wsum") - ybar * ybar).alias("YY"),
         )
-        # broadcast_stats=None leaves the stats joins UNHINTED in the
-        # engine (the escape hatch for extreme series cardinality); the
-        # verbatim reference at that setting is therefore also unhinted —
-        # the r10 first-line-only comparison masked a hint mismatch here
-        joined = base.join(pre, "series_id").crossJoin(
-            F.broadcast(freq_grid)
+        # the default plan: a dense int code per series and per grid point
+        # (row_number over a global window), the stats side persisted and
+        # broadcast into both of its joins
+        pre = pre.withColumn(
+            "_code", F.row_number().over(Window.orderBy("series_id"))
+        ).persist(StorageLevel.MEMORY_ONLY)
+        kgrid = freq_grid.withColumn(
+            "_k", F.row_number().over(Window.orderBy("frequency"))
+        )
+        joined = base.join(F.broadcast(pre), "series_id").crossJoin(
+            F.broadcast(kgrid)
         )
         theta = F.lit(TWO_PI) * F.col("frequency") * F.col("time")
         proj = joined.select(
-            "series_id",
-            "frequency",
+            "_code",
+            "_k",
             (F.col("werr") / F.col("wsum")).alias("_w"),
             (F.col("value") - F.col("ybar")).alias("_y"),
             F.sin(theta).alias("_s"),
             F.cos(theta).alias("_c"),
         )
         w, y, s, c = F.col("_w"), F.col("_y"), F.col("_s"), F.col("_c")
-        sums = proj.groupBy("series_id", "frequency").agg(
+        sums = proj.groupBy("_code", "_k").agg(
             F.sum(w * s).alias("S"),
             F.sum(w * c).alias("C"),
             F.sum(w * (2 * s * c)).alias("S2"),
@@ -359,7 +368,9 @@ def test_gls_sql_string_build_plan_identical_to_column_reference(spark):
             F.sum(w * y * s).alias("Sh"),
             F.sum(w * y * c).alias("Ch"),
         )
-        sums = sums.join(pre.select("series_id", "wsum", "YY"), "series_id")
+        sums = sums.join(
+            F.broadcast(pre.select("_code", "wsum", "YY", "series_id")), "_code"
+        ).join(F.broadcast(kgrid.select("_k", "frequency")), "_k")
         if fit_mean:
             tan2wt = F.try_divide(
                 F.col("S2") - 2 * F.col("S") * F.col("C"),
@@ -384,20 +395,26 @@ def test_gls_sql_string_build_plan_identical_to_column_reference(spark):
             power = power * (0.5 * F.col("wsum"))
         else:
             power = F.try_divide(power, F.col("YY"))
-        return sums.select("series_id", "frequency", power.alias("power"))
+        return sums.select("series_id", "frequency", power.alias("power")), pre
 
     def full_plan(df):
         """The ENTIRE optimized plan with ids canonicalized (r11, ADVICE
         r10: the first-line-only comparison left the sin/cos projection
         and the six-sum aggregate uncovered)."""
         s = df._jdf.queryExecution().optimizedPlan().toString()
-        return re.sub(r"#\d+", "#X", s)
+        # the cached side prints its physical plan, whose exchanges carry
+        # per-build plan ids
+        return re.sub(r"plan_id=\d+", "plan_id=X", re.sub(r"#\d+", "#X", s))
 
+    # Spark substitutes a cached subtree into EVERY plan that contains it,
+    # so the reference's cache entry is dropped before the engine plans:
+    # the engine's InMemoryRelation must then come from its own persist.
     for psd in (False, True):
         for fit_mean in (True, False):
-            ref = column_reference(sdf, grid, psd, fit_mean)
+            ref, ref_pre = column_reference(sdf, grid, psd, fit_mean)
+            ref_plan = full_plan(ref)
+            ref_pre.unpersist()
             new = gls_periodogram(
-                sdf, freq_grid=grid, psd=psd, fit_mean=fit_mean,
-                broadcast_stats=None,
+                sdf, freq_grid=grid, psd=psd, fit_mean=fit_mean
             )
-            assert full_plan(ref) == full_plan(new), (psd, fit_mean)
+            assert ref_plan == full_plan(new), (psd, fit_mean)

@@ -330,6 +330,43 @@ def test_stream_gls_accumulates_across_microbatches(spark, tmp_path):
     np.testing.assert_allclose(got["power"], want["power"], atol=1e-9)
 
 
+def test_gls_power_from_sums_equals_batch_periodogram(spark):
+    """The streaming finish over one (batch-evaluated) stream_gls_sums frame
+    of the sf0.001 events equals gls_periodogram on the same grid: same
+    keys, same NULL pattern, powers within 1e-9."""
+    import numpy as np
+
+    from periodicity_spark.sources.ingest import epoch_us_expr, ts_from_events
+    from periodicity_spark.spectral.gls import gls_periodogram, uniform_freq_grid
+    from periodicity_spark.streaming.gls import gls_power_from_sums, stream_gls_sums
+
+    raw = spark.read.parquet(f"{SF}/events.parquet")
+    events = raw.select(
+        F.concat_ws("/", "user_id", "event_type").alias("series_id"),
+        F.timestamp_micros(epoch_us_expr(raw)).alias("ts"),
+        "value",
+    )
+    grid = uniform_freq_grid(spark, 0.05, 0.015625, 32)
+    got = (
+        gls_power_from_sums(stream_gls_sums(events, grid), min_count=8)
+        .toPandas()
+        .sort_values(["series_id", "frequency"])
+        .reset_index(drop=True)
+    )
+    want = (
+        gls_periodogram(ts_from_events(spark, SF), freq_grid=grid, min_count=8)
+        .toPandas()
+        .sort_values(["series_id", "frequency"])
+        .reset_index(drop=True)
+    )
+    assert len(got) == len(want) > 0
+    assert (got["series_id"] == want["series_id"]).all()
+    assert (got["frequency"] == want["frequency"]).all()
+    assert (got["power"].isna() == want["power"].isna()).all()
+    ok = want["power"].notna()
+    np.testing.assert_allclose(got["power"][ok], want["power"][ok], atol=1e-9)
+
+
 def test_stream_funnel_matches_across_microbatches(spark, tmp_path):
     """Stream-stream interval join state: a click buffered in batch 1 must
     match a purchase arriving in batch 2 (within the 6 h horizon), and a

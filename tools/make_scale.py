@@ -4,8 +4,8 @@ bigger row counts, small parquet row groups so single-file scans still fan out.
 
 The driver's correctness gate tops out at sf0.1 (~600k lineitem rows); every
 100 TB design claim (bucket caps, AQE skew joins, broadcast-threshold flips,
-gls_auto's strategy pick) needs at least one order-of-magnitude scale-up to
-be observed rather than argued. Output goes under /root/repo/.scale/ (git-
+the scan floor and the LSH verify plan) needs at least one order-of-magnitude
+scale-up to be observed rather than argued. Output goes under /root/repo/.scale/ (git-
 ignored — these are derived artifacts, ~1-2 GiB each).
 
 Usage: python tools/make_scale.py sf1|sf5 [seed] [table ...]
