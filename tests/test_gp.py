@@ -189,7 +189,7 @@ def _scalar_gls_scan(t, y, n_grid=200):
     return freqs, np.asarray(powers), best
 
 
-def test_gls_best_period_equals_scalar_scan(spark):
+def test_gls_best_period_equals_scalar_scan(spark, sf_dir):
     """The GP period seed equals the scalar scan exactly, on every sf0.001
     events series of >= 12 points and on a series whose power is NaN at
     the top grid frequency (paired even-integer times, odd count: half the
@@ -201,7 +201,7 @@ def test_gls_best_period_equals_scalar_scan(spark):
     from periodicity_spark.sources.ingest import ts_from_events
 
     pdf = (
-        ts_from_events(spark, "/root/testdata/sf0.001")
+        ts_from_events(spark, sf_dir)
         .filter(F.col("value").isNotNull())
         .toPandas()
     )

@@ -5,8 +5,8 @@ bigger row counts, small parquet row groups so single-file scans still fan out.
 The driver's correctness gate tops out at sf0.1 (~600k lineitem rows); every
 100 TB design claim (bucket caps, AQE skew joins, broadcast-threshold flips,
 the scan floor and the LSH verify plan) needs at least one order-of-magnitude
-scale-up to be observed rather than argued. Output goes under /root/repo/.scale/ (git-
-ignored — these are derived artifacts, ~1-2 GiB each).
+scale-up to be observed rather than argued. Output goes under .scale/ at the
+repository root (git-ignored — these are derived artifacts, ~1-2 GiB each).
 
 Usage: python tools/make_scale.py sf1|sf5 [seed] [table ...]
 (naming tables regenerates only those files — e.g. after a generator fix)
@@ -18,7 +18,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from tools.fuzzcheck import generate
 
@@ -30,7 +31,7 @@ def main() -> int:
     seed = int(sys.argv[2]) if len(sys.argv) > 2 else 77
     only = set(sys.argv[3:]) or None
     scale = SCALES[name]
-    out = f"/root/repo/.scale/{name}"
+    out = os.path.join(REPO, ".scale", name)
     os.makedirs(out, exist_ok=True)
     t0 = time.time()
     generate(out, seed=seed, scale=scale, row_group_size=262_144, only=only)
